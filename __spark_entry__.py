@@ -1299,8 +1299,8 @@ def _plane_literal(plane: list[float]) -> str:
 
 def _dot_sql(vec: str, plane: list[float]) -> str:
     """Fold-left dot product against literal plane coefficients — exact twin
-    of similarity.bucket_from_planes (F.aggregate folds left from 0.0;
-    list_reduce folds left from the first element; 0.0 + v == v)."""
+    of the per-plane dot in similarity.bucket_sql (the Spark sum folds left
+    from 0.0; list_reduce folds left from the first element; 0.0 + v == v)."""
     dim = len(plane)
     return (
         f"list_reduce(list_transform(range(1, {dim + 1}), "

@@ -52,7 +52,12 @@ import math
 
 from pyspark.sql import functions as F
 
-from liblognorm_spark.functions.similarity import _sql_f
+from liblognorm_spark.functions.similarity import (
+    _dot_fold_sql,
+    _dot_pair_sql,
+    _norm_const_sql,
+    _sql_f,
+)
 
 #: fixed-point scale for order-independent centroid sums
 CENTROID_SCALE = 1 << 24
@@ -65,28 +70,15 @@ CENTROID_SCALE = 1 << 24
 DEFAULT_MAX_CLUSTER = 32768
 
 
-def _lit_vec(values):
-    return F.array(*[F.lit(float(v)) for v in values])
-
-
-def _norm_sql(vec_sql: str, dim: int) -> str:
-    """Unrolled codegen norm — see similarity._norm_const_sql."""
-    from liblognorm_spark.functions.similarity import _norm_const_sql
-
-    return _norm_const_sql(vec_sql, dim)
-
-
 def _cos_arr_sql(vec_sql: str, centroids, norm_sql: str | None = None) -> str:
     """array(cos(vec, c0), ..., cos(vec, ck-1)) as ONE SQL string, each
-    centroid's norm folded in as a driver-computed constant (same values
-    as the round-5 _cos_to_literal: Python's sum() folds left from 0 like
-    the SQL aggregate, math.sqrt is IEEE).  ``norm_sql`` names an
+    centroid's norm folded in as a driver-computed constant (Python's
+    sum() folds left from 0 like the SQL aggregate, math.sqrt is IEEE, so
+    the values match an in-SQL norm exactly).  ``norm_sql`` names an
     already-computed per-row norm column so the row norm is evaluated
     once instead of once per centroid."""
-    from liblognorm_spark.functions.similarity import _dot_fold_sql
-
     dim = len(centroids[0])
-    nv = norm_sql if norm_sql is not None else _norm_sql(vec_sql, dim)
+    nv = norm_sql if norm_sql is not None else _norm_const_sql(vec_sql, dim)
     # centroid dots keep the FOLD form: the centroid literals change
     # every Lloyd iteration, so an unrolled k x dim tree is re-analyzed/
     # re-compiled on every plan — measured +3.5 s per semdedup call at
@@ -112,36 +104,6 @@ def _cos_arr_sql(vec_sql: str, centroids, norm_sql: str | None = None) -> str:
 _ASSIGN_FROM_COS = "cast(array_position({c}, array_max({c})) - 1 as int)"
 
 
-def _cos_to_literal(vec, cent):
-    """cosine(vec, literal centroid) with the centroid's norm folded in
-    as a driver-computed constant — half the per-row work and half the
-    codegen expression size of cosine_expr(vec, lit(cent)).  Bit-parity
-    with the oracle's in-SQL norm is exact: Python's sum() folds left
-    from 0 like list_reduce (0.0 + x == x) and math.sqrt is IEEE."""
-    from liblognorm_spark.functions.similarity import dot_expr, norm_expr
-
-    cn = math.sqrt(sum(v * v for v in cent))
-    d = dot_expr(vec, _lit_vec(cent))
-    nv = norm_expr(vec)
-    if cn == 0.0:
-        return F.lit(0.0)
-    return F.when(nv == 0, F.lit(0.0)).otherwise(d / (nv * F.lit(cn)))
-
-
-def assign_expr(vec, centroids):
-    """Cluster id (0-based) of `vec` against literal `centroids`:
-    argmax cosine, ties to the lowest cluster index (array_position
-    returns the FIRST occurrence of the max — DuckDB's list_position
-    behaves identically).
-
-    Column-API form, kept for callers holding an arbitrary Column; the
-    operators below build the same expression as one SQL string
-    (F.expr) because per-element F.lit construction costs ~3 ms of py4j
-    per literal — seconds per Lloyd iteration at k x dim = 512."""
-    cosines = F.array(*[_cos_to_literal(vec, c) for c in centroids])
-    return (F.array_position(cosines, F.array_max(cosines)) - 1).cast("int")
-
-
 def _q(col: str) -> str:
     return f"`{col}`"
 
@@ -156,7 +118,7 @@ def _with_cluster(df, vec_col: str, centroids, out=None):
     dim = len(centroids[0])
     cos = _cos_arr_sql(_q(vec_col), centroids, norm_sql="_lls_nrm")
     return (
-        df.withColumn("_lls_nrm", F.expr(_norm_sql(_q(vec_col), dim)))
+        df.withColumn("_lls_nrm", F.expr(_norm_const_sql(_q(vec_col), dim)))
         .withColumn("_lls_cos", F.expr(cos))
         .select(*keep, F.expr(_ASSIGN_FROM_COS.format(c="_lls_cos")).alias("cluster"))
     )
@@ -192,7 +154,7 @@ def kmeans_fit(emb_df, k: int = 8, iters: int = 2,
         # generated code quadratically)
         scaled = (
             df.select(F.col(vec_col),
-                      F.expr(_norm_sql(_q(vec_col), dim)).alias("_nrm"))
+                      F.expr(_norm_const_sql(_q(vec_col), dim)).alias("_nrm"))
             .withColumn("_lls_cos", F.expr(_cos_arr_sql(_q(vec_col), cents,
                                                         norm_sql="_nrm")))
             .select(
@@ -279,7 +241,7 @@ def semdedup(emb_df, k: int = 8, iters: int = 2, threshold: float = 0.9,
     # cosine array column
     assigned = (
         base.select(F.col(id_col), F.col(vec_col),
-                    F.expr(_norm_sql(_q(vec_col), dim)).alias("_nrm"))
+                    F.expr(_norm_const_sql(_q(vec_col), dim)).alias("_nrm"))
         .withColumn("_lls_cos", F.expr(_cos_arr_sql(_q(vec_col), centroids,
                                                     norm_sql="_nrm")))
         .select(id_col, vec_col, "_nrm",
@@ -304,9 +266,7 @@ def semdedup(emb_df, k: int = 8, iters: int = 2, threshold: float = 0.9,
         F.col(vec_col).alias("vb"),
         F.col("_nrm").alias("nb"),
     )
-    from liblognorm_spark.functions.similarity import _dot_pair_sql
-
-    # same value as cosine_expr(va, vb): the norms are the identical
+    # same value as similarity.cos_pair_sql(va, vb): the norms are the identical
     # IEEE folds, computed once per row instead of once per pair, and
     # the per-pair dot is the unrolled codegen chain (the interpreted
     # zip_with fold dominated the within-cluster join at scale)

@@ -139,54 +139,36 @@ def _hmd5_long(col, seed: int):
 
 
 def minhash_signatures(df, text_col: str = "text", id_col: str = "doc_id",
-                       n: int = N_MINHASH, method: str = "agg"):
+                       n: int = N_MINHASH):
     """doc -> array<string> of n minhashes (16-hex-char) over word shingles.
 
-    Two physical strategies, identical results (min per seed over the same
-    shingle set — the DuckDB oracle mirrors the VALUE, not the plan):
+    ONE higher-order ``F.aggregate`` pass over the per-row shingle array
+    folds all n seeded mins — zero explode, zero shuffle, the whole
+    signature stage stays inside the row's partition (the DuckDB oracle
+    mirrors the VALUE, not the plan).
 
-    * ``agg`` (default): ONE higher-order ``F.aggregate`` pass over the
-      per-row shingle array folds all n seeded mins — zero explode, zero
-      shuffle, the whole signature stage stays inside the row's partition.
-      Chosen default on interleaved A/B medians (BASELINE.md).
-    * ``explode``: explode shingles once, n seeded hash columns, then
-      groupBy(doc).min per hash (map-side partial agg + one shuffle).
-
-    NULL-text docs are dropped up front so both strategies see the same
-    row set: without the filter the explode path silently drops them
-    (explode of a NULL array yields no rows) while the agg fold would
-    emit a NULL signature — which downstream banding would md5 into one
-    giant shared bucket of all NULL-text docs.
+    NULL-text docs are dropped up front: the fold would otherwise emit a
+    NULL signature, which downstream banding would md5 into one giant
+    shared bucket of all NULL-text docs.
     """
     df = df.where(F.col(text_col).isNotNull())
-    if method == "agg":
-        sentinel = F.array_repeat(F.lit("g"), n)  # 'g' > any hex char
-        acc_fold = F.aggregate(
-            F.col("_sh"),
-            sentinel,
-            lambda acc, s: F.array(*[
-                F.least(F.element_at(acc, i + 1), _hmd5(s, i)) for i in range(n)
-            ]),
-        )
-        return (
-            _spread(df)  # small parquet inputs arrive in 1-2 partitions;
-            # the fold is CPU-bound per row, so spread it across cores
-            .select(F.col(id_col), _word_shingles(F.col(text_col)).alias("_sh"))
-            .select(F.col(id_col), acc_fold.alias("minhash"))
-        )
-    sh = _spread(df).select(
-        F.col(id_col), F.explode(_word_shingles(F.col(text_col))).alias("shingle")
+    sentinel = F.array_repeat(F.lit("g"), n)  # 'g' > any hex char
+    acc_fold = F.aggregate(
+        F.col("_sh"),
+        sentinel,
+        lambda acc, s: F.array(*[
+            F.least(F.element_at(acc, i + 1), _hmd5(s, i)) for i in range(n)
+        ]),
     )
-    hashed = sh.select(
-        id_col, *[_hmd5(F.col("shingle"), i).alias(f"h{i}") for i in range(n)]
-    )
-    agg = hashed.groupBy(id_col).agg(*[F.min(f"h{i}").alias(f"h{i}") for i in range(n)])
-    return agg.select(
-        F.col(id_col), F.array(*[F.col(f"h{i}") for i in range(n)]).alias("minhash")
+    return (
+        _spread(df)  # small parquet inputs arrive in 1-2 partitions;
+        # the fold is CPU-bound per row, so spread it across cores
+        .select(F.col(id_col), _word_shingles(F.col(text_col)).alias("_sh"))
+        .select(F.col(id_col), acc_fold.alias("minhash"))
     )
 
 
-def _banded(df, text_col: str, id_col: str, n: int, bands: int, method: str = "agg",
+def _banded(df, text_col: str, id_col: str, n: int, bands: int,
             persist_sigs: bool = False):
     """(id, minhash, band, band_key) rows — ONE definition of the banding
     so the pair join and the bucket diagnostics can never drift apart.
@@ -200,7 +182,7 @@ def _banded(df, text_col: str, id_col: str, n: int, bands: int, method: str = "a
     per invocation (once per side of _cap_buckets) because the persist
     sat downstream of the cap."""
     rows = n // bands
-    sigs = minhash_signatures(df, text_col, id_col, n, method=method)
+    sigs = minhash_signatures(df, text_col, id_col, n)
     if persist_sigs:
         sigs = _persist(sigs)
     band_cols = [
@@ -217,8 +199,7 @@ def _banded(df, text_col: str, id_col: str, n: int, bands: int, method: str = "a
 
 def minhash_lsh_pairs(df, text_col: str = "text", id_col: str = "doc_id",
                       n: int = N_MINHASH, bands: int = N_BANDS,
-                      max_bucket_size: int | None = DEFAULT_MAX_BUCKET,
-                      method: str = "agg"):
+                      max_bucket_size: int | None = DEFAULT_MAX_BUCKET):
     """Candidate near-dup pairs via banded LSH: same band signature in any
     band -> candidate.  Returns distinct (id_a < id_b) pairs with their
     estimated jaccard (= matching minhash fraction, in millis).
@@ -235,8 +216,7 @@ def minhash_lsh_pairs(df, text_col: str = "text", id_col: str = "doc_id",
     # no matter how many times the banding is re-derived (hot-bucket
     # aggregate, its anti-join, both self-join sides) — before round 6
     # the fold ran twice because the persist sat below the cap
-    exploded = _banded(df, text_col, id_col, n, bands, method=method,
-                       persist_sigs=True)
+    exploded = _banded(df, text_col, id_col, n, bands, persist_sigs=True)
     if max_bucket_size is not None:
         exploded = _cap_buckets(exploded, ["band", "band_key"], max_bucket_size)
     # the capped frame is ALSO persisted (same layout the pre-round-6 code
@@ -420,16 +400,13 @@ def embedding_near_dups(emb_df, vec_col: str = "embedding", id_col: str = "vec_i
     must equal the embedding length: hyperplanes are literal arrays, and a
     length mismatch would null the dot products (zip_with null-pads)."""
     from liblognorm_spark.functions.similarity import (
-        _hyperplanes,
-        _table_structs_sql,
+        _bucketed,
+        _table_planes,
+        cos_pair_sql,
     )
 
-    planes = _hyperplanes(dim, ntables * nplanes)
-    tables = [planes[t * nplanes:(t + 1) * nplanes] for t in range(ntables)]
-    keyed = emb_df.select(
-        F.col(id_col), F.col(vec_col),
-        F.explode(F.expr(_table_structs_sql(f"`{vec_col}`", tables))).alias("tb"),
-    ).select(id_col, vec_col, "tb.tbl", "tb.bkt")
+    tables = _table_planes(dim, nplanes, ntables)
+    keyed = _bucketed(emb_df, vec_col, tables, id_col, vec_col)
     if max_bucket_size is not None:
         keyed = _cap_buckets(keyed, ["tbl", "bkt"], max_bucket_size)
     keyed = _persist(keyed)  # self-join reuses the bucketing
@@ -445,8 +422,6 @@ def embedding_near_dups(emb_df, vec_col: str = "embedding", id_col: str = "vec_i
         )
         .dropDuplicates(["id_a", "id_b"])  # dedup across tables BEFORE the cosine
     )
-    from liblognorm_spark.functions.similarity import cos_pair_sql
-
     cos = F.expr(f"cast({cos_pair_sql('`_va`', '`_vb`', dim)} * 1000 as long)")
     return pairs.select(
         "id_a", "id_b", cos.alias("cos_millis")

@@ -1,21 +1,35 @@
 """Similarity search over embedding columns (array<float>).
 
-Brute-force cosine top-k is the exact baseline (JVM-side zip_with/aggregate
-— no Python in the hot path); the LSH-bucketed variant is the scale path:
-at 100 TB the bucket join prunes candidates to O(rows/2^nplanes) per
-bucket.  build_ann_index() persists the bucketing as a partition column so
-queries prune at SCAN time (partition pruning, no per-query bucket
-computation over the corpus).
+Brute-force cosine top-k is the exact baseline (JVM-side expressions —
+no Python in the hot path); the LSH-bucketed variants are the scale
+path: at 100 TB the bucket filter or join prunes candidates to
+O(rows/2^nplanes) per bucket.  build_ann_index() persists the bucketing
+as a partition column so queries prune at SCAN time (partition pruning,
+no per-query bucket computation over the corpus).
+
+Every ANN entry point is a thin wrapper over four shared parts:
+
+* ``_bucketed`` — the one corpus bucketing: each row once per plane
+  table, keyed (tbl, bkt);
+* a probe plan ``{tbl: sorted buckets}`` — fixed-radius
+  (``_fixed_probe_plan``) or histogram-budgeted (``adaptive_probe_plan``);
+* ``_scan_candidates`` — a LITERAL query: one OR-filter over the
+  computed buckets, or over an index's (tbl, bkt) partition columns;
+* ``_batch_topk`` — a query FRAME: broadcast (tbl, bkt) equi-join,
+  dedup per (query, doc), scoring, per-query top-k window.
 
 All arithmetic is double-precision with explicit element casts and
 sequential (fold-left) summation, so the DuckDB oracles — which use
-list_reduce over ::DOUBLE[] — produce bit-identical values.
+list_reduce over ::DOUBLE[] — produce bit-identical values.  Expressions
+are built as SQL strings (one py4j call each instead of one per literal).
 """
 
 from __future__ import annotations
 
 import hashlib
 import math
+from functools import reduce
+from operator import or_
 
 from pyspark.sql import functions as F
 
@@ -24,18 +38,16 @@ from pyspark.sql import functions as F
 MAX_ADAPTIVE_BATCH_QUERIES = 50_000
 
 
-def dot_expr(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 def _sql_f(v: float) -> str:
     """A Python float as a Spark SQL DOUBLE literal (repr round-trips the
-    exact double; D keeps the parser off DECIMAL)."""
-    return f"{float(v)!r}D"
+    exact double; D keeps the parser off DECIMAL).  NaN and ±inf have no
+    literal form and would score every row as NULL or NaN, so they are
+    rejected here, where every vector literal passes."""
+    f = float(v)
+    if not math.isfinite(f):
+        raise ValueError(f"non-finite vector value {f!r}: query and centroid "
+                         "vectors must be finite")
+    return f"{f!r}D"
 
 
 #: above this many unrolled terms per EXPRESSION TREE, fall back to the
@@ -63,9 +75,9 @@ def _dot_const_sql(vec_sql: str, values) -> str:
     """Dot of a vector column against literal coefficients, as an
     UNROLLED left-associative sum: (v[0]*c0) + (v[1]*c1) + ...
 
-    Bit-identical to dot_expr(vec, lit_vec(values)) — a left-assoc `+`
-    chain adds in exactly the fold's order, and 0.0 + x == x for every
-    x the downstream integer scaling can distinguish — but, unlike the
+    Bit-identical to _dot_fold_sql — a left-assoc `+` chain adds in
+    exactly the fold's order, and 0.0 + x == x for every x the
+    downstream integer scaling can distinguish — but, unlike the
     aggregate/zip_with HigherOrderFunction (which Spark always
     interprets), plain Add/Multiply/GetArrayItem chains run inside
     whole-stage CODEGEN.  Measured on the 200k-vector tier this is the
@@ -81,13 +93,12 @@ def _dot_const_sql(vec_sql: str, values) -> str:
 
 def _norm_const_sql(vec_sql: str, dim: int) -> str:
     """Euclidean norm of a vector column, unrolled like _dot_const_sql
-    (bit-identical to norm_expr for dim-length vectors; squares are
-    never -0.0 so even the signed-zero corner agrees).  Same pinned-dim
-    contract: a vector SHORTER than dim (including an empty array) reads
-    out-of-range elements as NULL and the norm becomes NULL, where the
-    fold form returned the partial sum (and 0.0 for empty) — callers
-    must filter/validate vector length upstream, as every operator here
-    documents."""
+    (squares are never -0.0, so even the signed-zero corner agrees with
+    a fold).  Same pinned-dim contract: a vector SHORTER than dim
+    (including an empty array) reads out-of-range elements as NULL and
+    the norm becomes NULL, where a fold would return the partial sum (and
+    0.0 for empty) — callers must filter/validate vector length upstream,
+    as every operator here documents."""
     sq = " + ".join(
         f"(cast({vec_sql}[{i}] as double) * cast({vec_sql}[{i}] as double))"
         for i in range(dim)
@@ -96,8 +107,8 @@ def _norm_const_sql(vec_sql: str, dim: int) -> str:
 
 
 def _dot_pair_sql(a_sql: str, b_sql: str, dim: int) -> str:
-    """Unrolled dot of two vector COLUMNS (codegen; bit-identical to
-    dot_expr's fold for dim-length vectors)."""
+    """Unrolled dot of two vector COLUMNS (codegen; bit-identical to a
+    left fold for dim-length vectors)."""
     return "(" + " + ".join(
         f"(cast({a_sql}[{i}] as double) * cast({b_sql}[{i}] as double))"
         for i in range(dim)
@@ -105,7 +116,8 @@ def _dot_pair_sql(a_sql: str, b_sql: str, dim: int) -> str:
 
 
 def cos_pair_sql(a_sql: str, b_sql: str, dim: int) -> str:
-    """Unrolled twin of cosine_expr(a, b) for dim-length vectors."""
+    """Cosine of two dim-length vector columns, 0.0 when either norm is
+    zero."""
     na = _norm_const_sql(a_sql, dim)
     nb = _norm_const_sql(b_sql, dim)
     return (
@@ -116,10 +128,10 @@ def cos_pair_sql(a_sql: str, b_sql: str, dim: int) -> str:
 
 
 def cos_const_sql(vec_sql: str, query_vec) -> str:
-    """SQL twin of cosine_expr(vec, lit(query_vec)) with the query norm
-    folded in driver-side: Python's sum() folds left from 0 exactly like
-    the SQL aggregate and math.sqrt is IEEE, so norm(q) is the same
-    double and the quotient is bit-identical."""
+    """Cosine of a vector column against a literal query, with the query
+    norm folded in driver-side: Python's sum() folds left from 0 exactly
+    like the SQL fold and math.sqrt is IEEE, so norm(q) is the same
+    double and the quotient is bit-identical to cos_pair_sql."""
     qn = math.sqrt(sum(float(v) * float(v) for v in query_vec))
     if qn == 0.0:
         return "cast(0.0 as double)"
@@ -128,22 +140,6 @@ def cos_const_sql(vec_sql: str, query_vec) -> str:
         f"(CASE WHEN {nv} = cast(0.0 as double) THEN cast(0.0 as double) "
         f"ELSE {_dot_const_sql(vec_sql, query_vec)} / ({nv} * {_sql_f(qn)}) END)"
     )
-
-
-def norm_expr(a):
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-
-
-def cosine_expr(a, b):
-    d = dot_expr(a, b)
-    na, nb = norm_expr(a), norm_expr(b)
-    return F.when((na == 0) | (nb == 0), F.lit(0.0)).otherwise(d / (na * nb))
 
 
 def _hyperplanes(dim: int, nplanes: int, seed: str = "lls-hp"):
@@ -161,29 +157,13 @@ def _hyperplanes(dim: int, nplanes: int, seed: str = "lls-hp"):
     return planes
 
 
-def bucket_from_planes(vec, planes):
-    """Sign-pattern bucket id (0..2^len(planes)-1) of `vec` against an
-    explicit plane list.  `vec` elements are cast to double so the fold
-    matches the DuckDB twin exactly."""
-    bucket = F.lit(0)
-    for p, plane in enumerate(planes):
-        d = F.aggregate(
-            F.zip_with(
-                vec,
-                F.array(*[F.lit(float(v)) for v in plane]),
-                lambda x, y: x.cast("double") * y,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bucket = bucket + F.when(d >= 0, F.lit(2**p)).otherwise(F.lit(0))
-    return bucket
-
-
 def bucket_sql(vec_sql: str, planes, fold: bool | None = None) -> str:
-    """SQL twin of bucket_from_planes — same per-plane dot, same int sum
-    of 2^p terms, built as one string (the multi-table builders were
-    spending seconds of driver time on per-element F.lit py4j calls).
+    """Sign-pattern bucket id (0..2^len(planes)-1) of a vector column
+    against an explicit plane list: the int sum of 2^p over planes p with
+    a non-negative dot, built as one string (the multi-table builders
+    were spending seconds of driver time on per-element F.lit py4j
+    calls).  Elements are cast to double so the dot matches the DuckDB
+    twin exactly.
 
     ``fold`` picks the dot form; None auto-selects: unrolled codegen for
     this bucket alone when it fits the unroll budget.  Callers that
@@ -207,12 +187,10 @@ def _qcol(col: str) -> str:
     return f"`{col}`"
 
 
-def _table_structs_sql(vec_sql: str, tables, bkt_name: str = "bkt",
-                       cast_long: bool = False) -> str:
-    """array(named_struct('tbl', t, '<bkt_name>', bucket_t)) over all
-    plane tables — the explode argument every multi-table builder uses,
-    as one SQL string.  The unroll budget is applied to the WHOLE array
-    (all tables land in one expression tree)."""
+def _table_structs_sql(vec_sql: str, tables, cast_long: bool = False) -> str:
+    """array(named_struct('tbl', t, 'bkt', bucket_t)) over all plane
+    tables, as one SQL string.  The unroll budget is applied to the WHOLE
+    array (all tables land in one expression tree)."""
     total_terms = sum(len(p) * len(p[0]) for p in tables)
     fold = total_terms > UNROLL_MAX_TERMS
     items = []
@@ -220,21 +198,23 @@ def _table_structs_sql(vec_sql: str, tables, bkt_name: str = "bkt",
         b = bucket_sql(vec_sql, planes, fold=fold)
         if cast_long:
             b = f"cast({b} as long)"
-        items.append(f"named_struct('tbl', {t}, '{bkt_name}', {b})")
+        items.append(f"named_struct('tbl', {t}, 'bkt', {b})")
     return "array(" + ", ".join(items) + ")"
 
 
-def hyperplane_bucket(vec, nplanes: int = 8, dim: int = 16):
-    """Sign-pattern bucket id of `vec` against the deterministic hyperplane
-    set.  `dim` MUST equal the embedding length — the planes are literal
-    arrays and zip_with null-pads on mismatch (nulling the dot product)."""
-    return bucket_from_planes(vec, _hyperplanes(dim, nplanes))
+def _bucketed(df, vec_col: str, tables, *keep: str, cast_long: bool = False):
+    """``keep`` columns of ``df`` plus (tbl, bkt): one row per plane
+    table, keyed by the row's bucket in that table.  The one corpus
+    bucketing every multi-table operator shares (histogram, index
+    build, batch join sides, embedding near-dups)."""
+    structs = _table_structs_sql(_qcol(vec_col), tables, cast_long=cast_long)
+    return df.select(*keep, F.explode(F.expr(structs)).alias("tb")) \
+        .select(*keep, "tb.tbl", "tb.bkt")
 
 
 def _qbucket_planes(query_vec: list[float], planes) -> int:
     """Driver-side bucket of a literal query vector against an explicit
-    plane list (same fold as bucket_from_planes: sum() folds left from 0,
-    matching F.aggregate)."""
+    plane list (same fold as bucket_sql: sum() folds left from 0)."""
     b = 0
     for p, plane in enumerate(planes):
         if sum(a * v for a, v in zip(query_vec, plane)) >= 0:
@@ -242,16 +222,10 @@ def _qbucket_planes(query_vec: list[float], planes) -> int:
     return b
 
 
-def query_bucket(query_vec: list[float], nplanes: int) -> int:
-    """Driver-side bucket of a literal query vector."""
-    return _qbucket_planes(query_vec, _hyperplanes(len(query_vec), nplanes))
-
-
 def _table_planes(dim: int, nplanes: int, n_tables: int):
-    """Per-table hyperplane sets, sliced from one deterministic sequence —
-    the SAME convention dedup.embedding_near_dups uses, so table 0 of a
-    multi-table call is exactly the single-table plane set (n_tables=1
-    reproduces the legacy behavior bit-for-bit)."""
+    """Per-table hyperplane sets, sliced from one deterministic sequence,
+    so table 0 of a multi-table call is exactly the single-table plane
+    set (n_tables=1 reproduces the legacy behavior bit-for-bit)."""
     planes = _hyperplanes(dim, n_tables * nplanes)
     return [planes[t * nplanes:(t + 1) * nplanes] for t in range(n_tables)]
 
@@ -260,9 +234,7 @@ def brute_force_topk(emb_df, query_vec: list[float], k: int = 10,
                      vec_col: str = "embedding", id_col: str = "vec_id"):
     """Exact cosine top-k against a literal query vector.  The query is a
     constant folded into the plan (the '1-row broadcast side'); its norm
-    is a driver-side constant (same left-fold sum + IEEE sqrt as the SQL
-    fold, so the quotient is bit-identical to cosine_expr against the
-    literal array)."""
+    is a driver-side constant (see cos_const_sql)."""
     cos = cos_const_sql(_qcol(vec_col), query_vec)
     scored = emb_df.select(
         F.col(id_col),
@@ -287,6 +259,70 @@ def _probe_buckets(qbucket: int, nplanes: int, probe_hamming: int) -> list[int]:
     return sorted(probes)
 
 
+def _fixed_probe_plan(query_vec: list[float], tables, probe_hamming: int) -> dict:
+    """{tbl: sorted probe buckets}: in every table, all buckets within
+    ``probe_hamming`` bit flips of the query's bucket — the fixed-radius
+    planner, same shape as adaptive_probe_plan."""
+    return {t: _probe_buckets(_qbucket_planes(query_vec, planes),
+                              len(planes), probe_hamming)
+            for t, planes in enumerate(tables)}
+
+
+def _scan_candidates(df, plan: dict, vec_col: str, id_col: str, tables=None):
+    """The literal-query executor: rows of ``df`` whose bucket in ANY
+    planned table is one of that table's probe buckets, as ONE OR-filter
+    (no join).  With ``tables`` the buckets are computed from the vector
+    column; without, ``df`` is a build_ann_index() table and the filter
+    is a predicate on its (tbl, bkt) partition columns — or bkt alone
+    for the single-table legacy layout — so the scan prunes directories.
+    A multi-table index stores a row once per table, so its candidates
+    are deduped by id before scoring."""
+    if tables is not None:
+        dim = len(tables[0][0])
+        fold = len(plan) * len(tables[0]) * dim > UNROLL_MAX_TERMS  # one OR-chained tree
+        cond = reduce(or_, (
+            F.expr(bucket_sql(_qcol(vec_col), tables[t], fold=fold)).isin(*bs)
+            for t, bs in plan.items()))
+        return df.select(F.col(id_col), F.col(vec_col)).where(cond)
+    if "tbl" not in df.columns:
+        return df.where(reduce(or_, (F.col("bkt").isin(*bs) for bs in plan.values())))
+    cond = reduce(or_, ((F.col("tbl") == t) & F.col("bkt").isin(*bs)
+                        for t, bs in plan.items()))
+    return df.where(cond).dropDuplicates([id_col])
+
+
+def _batch_topk(corpus, probes, k: int, dim: int, vec_col: str, id_col: str,
+                query_id_col: str, qvecs=None):
+    """The query-frame executor: ``corpus`` rows keyed (tbl, bkt) (see
+    _bucketed) equi-join the BROADCAST ``probes`` table on (tbl, bkt);
+    candidates dedupe per (query, doc), are scored against the query
+    vector ``_qv`` — carried on the probe rows, or joined from the
+    broadcast ``qvecs`` (query_id, _qv) after the dedup — and a
+    per-query window keeps the top k.  No cartesian product anywhere:
+    the only joins are hash-partitionable on bucket or query keys.
+
+    Returns (query_id, vec_id, cos_micros, rn) with rn = 1..k per query
+    (ties broken by vec_id, so output is deterministic)."""
+    from pyspark.sql import Window
+    from pyspark.sql.functions import broadcast
+
+    cand = (
+        corpus.join(broadcast(probes), ["tbl", "bkt"])
+        .dropDuplicates([query_id_col, id_col])
+    )
+    if qvecs is not None:
+        cand = cand.join(broadcast(qvecs), query_id_col)
+    scored = cand.select(
+        F.col(query_id_col), F.col(id_col),
+        F.expr(f"cast({cos_pair_sql(_qcol(vec_col), '`_qv`', dim)} * 1000000 "
+               "as long)").alias("cos_micros"),
+    )
+    w = Window.partitionBy(query_id_col).orderBy(
+        F.col("cos_micros").desc(), F.col(id_col))
+    return (scored.withColumn("rn", F.row_number().over(w))
+            .where(F.col("rn") <= k))
+
+
 def ann_candidates(emb_df, query_vec: list[float],
                    vec_col: str = "embedding", id_col: str = "vec_id",
                    nplanes: int = 6, probe_hamming: int = 2,
@@ -298,14 +334,9 @@ def ann_candidates(emb_df, query_vec: list[float],
     lever dedup.embedding_near_dups uses).  Exposed separately so recall
     experiments can COUNT candidates (the scanned fraction) with the exact
     production predicate."""
-    dim = len(query_vec)
-    fold = n_tables * nplanes * dim > UNROLL_MAX_TERMS  # one OR-chained tree
-    cond = None
-    for planes in _table_planes(dim, nplanes, n_tables):
-        probes = _probe_buckets(_qbucket_planes(query_vec, planes), nplanes, probe_hamming)
-        c = F.expr(bucket_sql(_qcol(vec_col), planes, fold=fold)).isin(*probes)
-        cond = c if cond is None else (cond | c)
-    return emb_df.select(F.col(id_col), F.col(vec_col)).where(cond)
+    tables = _table_planes(len(query_vec), nplanes, n_tables)
+    plan = _fixed_probe_plan(query_vec, tables, probe_hamming)
+    return _scan_candidates(emb_df, plan, vec_col, id_col, tables)
 
 
 def lsh_topk(emb_df, query_vec: list[float], k: int = 10,
@@ -346,9 +377,7 @@ def bucket_histogram(emb_df, dim: int, vec_col: str = "embedding",
     keeps the scan-time variant self-contained.  Reusable across queries:
     compute once, plan many."""
     tables = _table_planes(dim, nplanes, n_tables)
-    keyed = emb_df.select(
-        F.explode(F.expr(_table_structs_sql(_qcol(vec_col), tables))).alias("tb"),
-    ).groupBy("tb.tbl", "tb.bkt").count()
+    keyed = _bucketed(emb_df, vec_col, tables).groupBy("tbl", "bkt").count()
     return {(r["tbl"], r["bkt"]): r["count"] for r in keyed.collect()}
 
 
@@ -424,12 +453,7 @@ def ann_candidates_adaptive(emb_df, query_vec: list[float],
     plan = adaptive_probe_plan(hist, query_vec, nplanes, n_tables,
                                target_frac, max_hamming)
     tables = _table_planes(dim, nplanes, n_tables)
-    fold = len(plan) * nplanes * dim > UNROLL_MAX_TERMS  # one OR-chained tree
-    cond = None
-    for t, probes in plan.items():
-        c = F.expr(bucket_sql(_qcol(vec_col), tables[t], fold=fold)).isin(*probes)
-        cond = c if cond is None else (cond | c)
-    return emb_df.select(F.col(id_col), F.col(vec_col)).where(cond)
+    return _scan_candidates(emb_df, plan, vec_col, id_col, tables)
 
 
 def lsh_topk_adaptive(emb_df, query_vec: list[float], k: int = 10,
@@ -464,50 +488,27 @@ def lsh_topk_batch(emb_df, query_df, dim: int, k: int = 10,
     expand to (tbl, probe_bkt) once per (table, probe) — probing bucket b
     at hamming radius h means probing b XOR m for every mask m with
     popcount(m) <= h, so the probe set is a LITERAL mask array applied
-    with bitwiseXOR.  The query side (tiny next to the corpus) is
-    BROADCAST into an equi-join on (tbl, bkt); candidates dedupe per
-    (query, doc) and a per-query window takes the top k.  No cartesian
-    product anywhere: the only join is hash-partitionable on bucket keys.
+    with bitwiseXOR, fully distributed.  The rest is _batch_topk: the
+    query side (tiny next to the corpus) is BROADCAST into an equi-join
+    on (tbl, bkt), candidates dedupe per (query, doc) and a per-query
+    window takes the top k.
 
     Returns (query_id, vec_id, cos_micros, rn) with rn = 1..k per query
     (ties broken by vec_id, so output is deterministic)."""
-    from pyspark.sql import Window
-    from pyspark.sql.functions import broadcast
-
     tables = _table_planes(dim, nplanes, n_tables)
     masks = _probe_buckets(0, nplanes, probe_hamming)  # XOR masks, popcount<=h
-    corpus = emb_df.select(
-        F.col(id_col), F.col(vec_col),
-        F.explode(F.expr(_table_structs_sql(_qcol(vec_col), tables))).alias("tb"),
-    ).select(id_col, vec_col, "tb.tbl", "tb.bkt")
-    queries = query_df.select(
-        F.col(query_id_col), F.col(query_vec_col).alias("_qv"),
-        F.explode(F.expr(_table_structs_sql(
-            _qcol(query_vec_col), tables, bkt_name="qbkt"))).alias("tb"),
+    corpus = _bucketed(emb_df, vec_col, tables, id_col, vec_col)
+    queries = _bucketed(
+        query_df, query_vec_col, tables, query_id_col, query_vec_col,
     ).select(
-        query_id_col, "_qv", "tb.tbl",
+        query_id_col, F.col(query_vec_col).alias("_qv"), "tbl",
         F.explode(F.array(*[F.lit(m) for m in masks])).alias("_mask"),
-        F.col("tb.qbkt"),
+        F.col("bkt").alias("qbkt"),
     ).select(
         query_id_col, "_qv", "tbl",
         F.col("qbkt").bitwiseXOR(F.col("_mask")).alias("bkt"),
     )
-    cand = (
-        corpus.join(broadcast(queries), ["tbl", "bkt"])
-        .dropDuplicates([query_id_col, id_col])
-    )
-    scored = cand.select(
-        F.col(query_id_col), F.col(id_col),
-        F.expr(f"cast({cos_pair_sql(_qcol(vec_col), '`_qv`', dim)} * 1000000 "
-               "as long)").alias("cos_micros"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos_micros").desc(), F.col(id_col)
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-    )
+    return _batch_topk(corpus, queries, k, dim, vec_col, id_col, query_id_col)
 
 
 def lsh_topk_batch_adaptive(emb_df, query_df, dim: int, k: int = 10,
@@ -533,9 +534,6 @@ def lsh_topk_batch_adaptive(emb_df, query_df, dim: int, k: int = 10,
     scores) — pinned by test.
 
     Returns (query_id, vec_id, cos_micros, rn), rn = 1..k per query."""
-    from pyspark.sql import Window
-    from pyspark.sql.functions import broadcast
-
     spark = emb_df.sparkSession
     if hist is None:
         hist = bucket_histogram(emb_df, dim, vec_col, nplanes, n_tables)
@@ -568,26 +566,9 @@ def lsh_topk_batch_adaptive(emb_df, query_df, dim: int, k: int = 10,
     qvecs = spark.createDataFrame(
         qvec_rows, f"{query_id_col} long, _qv array<double>")
     tables = _table_planes(dim, nplanes, n_tables)
-    corpus = emb_df.select(
-        F.col(id_col), F.col(vec_col),
-        F.explode(F.expr(_table_structs_sql(_qcol(vec_col), tables,
-                                            cast_long=True))).alias("tb"),
-    ).select(id_col, vec_col, F.col("tb.tbl").cast("int").alias("tbl"),
-             "tb.bkt")
-    cand = (
-        corpus.join(broadcast(probes), ["tbl", "bkt"])
-        .dropDuplicates([query_id_col, id_col])
-        .join(broadcast(qvecs), query_id_col)
-    )
-    scored = cand.select(
-        F.col(query_id_col), F.col(id_col),
-        F.expr(f"cast({cos_pair_sql(_qcol(vec_col), '`_qv`', dim)} * 1000000 "
-               "as long)").alias("cos_micros"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos_micros").desc(), F.col(id_col))
-    return (scored.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= k))
+    corpus = _bucketed(emb_df, vec_col, tables, id_col, vec_col, cast_long=True)
+    return _batch_topk(corpus, probes, k, dim, vec_col, id_col, query_id_col,
+                       qvecs)
 
 
 def build_ann_index(emb_df, path: str, dim: int,
@@ -604,10 +585,7 @@ def build_ann_index(emb_df, path: str, dim: int,
     buckets for 100 TB -> ~100 GB per bucket, further split by parquet
     row groups)."""
     tables = _table_planes(dim, nplanes, n_tables)
-    keyed = emb_df.select(
-        F.col(id_col), F.col(vec_col),
-        F.explode(F.expr(_table_structs_sql(_qcol(vec_col), tables))).alias("tb"),
-    ).select(id_col, vec_col, "tb.tbl", "tb.bkt")
+    keyed = _bucketed(emb_df, vec_col, tables, id_col, vec_col)
     keyed.write.mode("overwrite").partitionBy("tbl", "bkt").parquet(path)
 
 
@@ -620,25 +598,16 @@ def lsh_topk_indexed(spark, index_path: str, query_vec: list[float], k: int = 10
     directories (verify with .explain -> PartitionFilters).  A row that
     collides with the query in several tables is scored once
     (dropDuplicates on the id before scoring)."""
-    dim = len(query_vec)
     idx = spark.read.parquet(index_path)
-    if "tbl" not in idx.columns:
+    if "tbl" not in idx.columns and n_tables != 1:
         # index written by the pre-multi-table layout (partitioned by bkt
         # only): valid for single-table queries, unreadable for more
-        if n_tables != 1:
-            raise ValueError(
-                f"{index_path} is a single-table (bkt-partitioned) index; "
-                f"rebuild with build_ann_index(..., n_tables={n_tables}) "
-                "to query multiple tables"
-            )
-        planes = _table_planes(dim, nplanes, 1)[0]
-        probes = _probe_buckets(_qbucket_planes(query_vec, planes), nplanes, probe_hamming)
-        cand = idx.where(F.col("bkt").isin(*probes))
-        return brute_force_topk(cand, query_vec, k, vec_col, id_col)
-    cond = None
-    for t, planes in enumerate(_table_planes(dim, nplanes, n_tables)):
-        probes = _probe_buckets(_qbucket_planes(query_vec, planes), nplanes, probe_hamming)
-        c = (F.col("tbl") == t) & F.col("bkt").isin(*probes)
-        cond = c if cond is None else (cond | c)
-    cand = idx.where(cond).dropDuplicates([id_col])
+        raise ValueError(
+            f"{index_path} is a single-table (bkt-partitioned) index; "
+            f"rebuild with build_ann_index(..., n_tables={n_tables}) "
+            "to query multiple tables"
+        )
+    tables = _table_planes(len(query_vec), nplanes, n_tables)
+    plan = _fixed_probe_plan(query_vec, tables, probe_hamming)
+    cand = _scan_candidates(idx, plan, vec_col, id_col)
     return brute_force_topk(cand, query_vec, k, vec_col, id_col)

@@ -4,7 +4,7 @@ Execution model (the Spark-first replacement for the reference's per-message
 ``ln_normalize`` loop, src/lognormalizer.c:213-267):
 
 * The rulebase is compiled once on the driver (:func:`compile_rulebase`)
-  and shipped to executors inside the ``mapInPandas`` closure — the
+  and shipped to executors inside the ``pandas_udf`` closure — the
   broadcast-once / read-many design of the reference's immutable PDAG
   (doc/pdag_implementation_model.rst:117-123).
 * Matching runs per Arrow batch: ONE anchored fullmatch per row against
@@ -18,16 +18,15 @@ Execution model (the Spark-first replacement for the reference's per-message
   prefix-indexed candidate set, which also produces the
   ``unparsed-data`` longest-parse diagnostics.
 
-No per-row Python crosses the Spark API surface: the entry points are a
-struct-returning scalar pandas_udf (``normalize_df``) and
-``mapInPandas`` over Arrow record batches.
+No per-row Python crosses the Spark API surface: the entry point is a
+struct-returning scalar pandas_udf (``normalize_df``) over Arrow record
+batches.
 """
 
 from __future__ import annotations
 
 import bisect
 import json as _json
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -41,7 +40,7 @@ from liblognorm_spark.compiler.motifs import Reject
 from liblognorm_spark.rulebase.loader import Rulebase
 from liblognorm_spark.runtime.walker import attach, normalize_message
 
-# output schema of the match stage (DDL form for mapInPandas)
+# match columns normalize_df appends, in order (DDL form)
 MATCH_FIELDS_DDL = (
     "rule_id int, tags array<string>, fields_json string, "
     "unparsed_data string, originalmsg string, parsed_to int, "
@@ -55,28 +54,6 @@ def _finalize_event(crb: CompiledRulebase, cr, ev: dict) -> dict:
     if cr.extra_fields:
         ev.update(cr.extra_fields)
     return ev
-
-
-def _rule_meta(crb: CompiledRulebase):
-    """Three per-rule maps (rule_id -> tags list / rb_file / rb_line),
-    each with the -1 unmatched default.  Kept as THREE separate maps on
-    purpose: a combined rule_id -> (tags, file, line) map with a zip(*)
-    transpose at the call site was tried and measured ~13% slower on
-    matched-heavy batches (see match_batch), so the three-pass rebuild is
-    the faster layout.  The tags list is ONE shared object per rule —
-    consumers only ever read it; building a fresh list per matched row was
-    a measurable cost on matched-heavy batches.  Cached on the rulebase."""
-    maps = getattr(crb, "_rule_meta_cache", None)
-    if maps is None:
-        tmap = {-1: None}
-        fmap = {-1: None}
-        lmap = {-1: 0}
-        for cr in crb.rules:
-            tmap[cr.rule_id] = list(cr.tags)
-            fmap[cr.rule_id] = cr.rule.rb_file
-            lmap[cr.rule_id] = cr.rule.rb_line
-        maps = crb._rule_meta_cache = (tmap, fmap, lmap)
-    return maps
 
 
 def _dumps_std(ev: dict) -> str:
@@ -388,8 +365,11 @@ def match_batch(crb: CompiledRulebase, texts: pd.Series,
                 add_originalmsg: bool = False,
                 add_rule_mockup: bool = False,
                 add_exec_path: bool = False) -> pd.DataFrame:
-    """Normalize a batch of messages.  Returns a DataFrame with
-    MATCH_FIELDS_DDL columns, index-aligned positionally with `texts`.
+    """Normalize a batch of messages.  Returns a DataFrame with columns
+    rule_id, fields_json, unparsed_data, originalmsg and parsed_to,
+    index-aligned positionally with `texts`.  The per-rule constants
+    (tags, rulebase location) are not built here: normalize_df derives
+    them JVM-side from rule_id.
 
     `add_rule_location` mirrors LN_CTXOPT_ADD_RULE_LOCATION
     (src/pdag.c:1254-1263: metadata.rule.location {file,line});
@@ -399,10 +379,7 @@ def match_batch(crb: CompiledRulebase, texts: pd.Series,
     template)."""
     n = len(texts)
     tvals = texts.to_numpy(dtype=object)
-    # plain lists: scalar assignment is ~3x cheaper than numpy setitem.
-    # tags/rb_file/rb_line are per-rule CONSTANTS — they are not stored per
-    # row in the hot loop but reconstructed at the end from rule_id via one
-    # C-level map() pass per column.
+    # plain lists: scalar assignment is ~3x cheaper than numpy setitem
     rule_id: list = [-1] * n
     fields_json: list = [None] * n
     unparsed: list = [None] * n
@@ -789,20 +766,13 @@ def match_batch(crb: CompiledRulebase, texts: pd.Series,
     if not decorate_needed:
         crb._fb_memo_bytes = fb_bytes
 
-    # per-rule constant columns, one C-level map() pass each (rule_id -1 ->
-    # the unmatched defaults; a single combined-map pass + zip transpose
-    # was tried and measured ~13% slower than three map passes)
-    tmap, fmap, lmap = _rule_meta(crb)
     return pd.DataFrame(
         {
             "rule_id": pd.array(rule_id, dtype="int32"),
-            "tags": list(map(tmap.__getitem__, rule_id)),
             "fields_json": fields_json,
             "unparsed_data": unparsed,
             "originalmsg": originalmsg,
             "parsed_to": pd.array(parsed_to, dtype="int32"),
-            "rb_file": list(map(fmap.__getitem__, rule_id)),
-            "rb_line": pd.array(list(map(lmap.__getitem__, rule_id)), dtype="int32"),
         }
     )
 
@@ -842,7 +812,7 @@ def normalize_df(df, rb: Rulebase | CompiledRulebase, text_col: str = "text"):
 
     @F.pandas_udf(struct_ddl)
     def _match(s: pd.Series) -> pd.DataFrame:
-        return match_batch(crb, s).drop(columns=["tags", "rb_file", "rb_line", "originalmsg"])
+        return match_batch(crb, s).drop(columns=["originalmsg"])
 
     out = (
         df.withColumn("_m", _match(F.col(text_col)))
@@ -876,24 +846,6 @@ def normalize_df(df, rb: Rulebase | CompiledRulebase, text_col: str = "text"):
             .withColumn("rb_line", F.lit(None).cast("int"))
         )
     # canonical column order is part of the API: input columns first, then
-    # the MATCH_FIELDS_DDL order — identical to normalize_df_mapinpandas,
-    # so positional consumers can switch between the two implementations
+    # the MATCH_FIELDS_DDL order
     match_cols = [p.split()[0] for p in MATCH_FIELDS_DDL.split(", ")]
     return out.select(*df.columns, *match_cols)
-
-
-def normalize_df_mapinpandas(df, rb: Rulebase | CompiledRulebase, text_col: str = "text"):
-    """mapInPandas variant (kept for the CLI/streaming paths where the
-    whole batch is needed Python-side anyway)."""
-    crb = rb if isinstance(rb, CompiledRulebase) else compile_rulebase(rb)
-    in_schema = df.schema
-    out_ddl = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in in_schema.fields)
-    schema = out_ddl + ", " + MATCH_FIELDS_DDL
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            res = match_batch(crb, pdf[text_col])
-            res.index = pdf.index
-            yield pd.concat([pdf, res], axis=1)
-
-    return df.mapInPandas(fn, schema=schema)

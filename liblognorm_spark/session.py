@@ -5,6 +5,20 @@ from __future__ import annotations
 import os
 
 
+def _default_driver_memory() -> str:
+    """Half of the host's /proc/meminfo MemTotal, capped at 64g.  A heap
+    sized past physical memory gets the JVM OOM-killed on small hosts;
+    the other half is left to the Python workers and the OS."""
+    try:
+        with open("/proc/meminfo") as f:
+            total_kb = next(int(ln.split()[1]) for ln in f
+                            if ln.startswith("MemTotal:"))
+        total_mb = total_kb // 1024
+    except (OSError, StopIteration, ValueError):
+        total_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 20
+    return f"{min(64 * 1024, total_mb // 2)}m"
+
+
 def get_spark(app: str = "liblognorm_spark", cpus: int | None = None, shuffle_partitions: int | None = None):
     from pyspark.sql import SparkSession
 
@@ -32,7 +46,8 @@ def get_spark(app: str = "liblognorm_spark", cpus: int | None = None, shuffle_pa
         # local mode = driver-only: the driver heap is the executor heap.
         # GC pressure is the first scaling killer for the match stage at
         # high core counts (measured: 8g heap halves 32-core throughput).
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "64g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory())
         .config("spark.ui.enabled", "false")
         # CPU-heavy Python match stage: smaller input splits (vs the 128MB
         # scan default) give 3-4 tasks per core, smoothing stragglers and

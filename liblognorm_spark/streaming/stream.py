@@ -1,11 +1,11 @@
 """Structured Streaming variant of the pipeline.
 
-The batch operators compose unchanged: normalize_df (mapInPandas) works on
-streaming DataFrames, so the stream is readStream -> parse -> enrich ->
-route -> windowed aggregate / fan-out sinks, with watermarks for late data
-and checkpointLocation for exactly-once resume — the incremental execution
-mode the reference CLI (stdin loop, src/lognormalizer.c:229-257) never
-had.
+The batch operators compose unchanged: normalize_df (a struct-returning
+pandas_udf) works on streaming DataFrames, so the stream is readStream ->
+parse -> enrich -> route -> windowed aggregate / fan-out sinks, with
+watermarks for late data and checkpointLocation for exactly-once resume
+— the incremental execution mode the reference CLI (stdin loop,
+src/lognormalizer.c:229-257) never had.
 """
 
 from __future__ import annotations

@@ -404,19 +404,18 @@ def test_dedup_clusters_shape(spark):
 
 
 def test_minhash_null_text_dropped_both_methods(spark):
-    """ADVICE (round 3): NULL-text docs must vanish from BOTH physical
-    strategies — the agg fold used to emit a NULL signature that banding
-    md5'd into one shared bucket for every NULL-text doc."""
+    """ADVICE (round 3): NULL-text docs must vanish from the signatures —
+    the agg fold used to emit a NULL signature that banding md5'd into
+    one shared bucket for every NULL-text doc."""
     from liblognorm_spark.functions.dedup import minhash_lsh_pairs, minhash_signatures, unpersist_dedup_caches
 
     docs = spark.createDataFrame(
         [(1, "alpha beta gamma delta"), (2, None), (3, None), (4, "omega psi chi phi")],
         "doc_id long, text string",
     )
-    for method in ("agg", "explode"):
-        sigs = minhash_signatures(docs, method=method).collect()
-        assert sorted(r["doc_id"] for r in sigs) == [1, 4], method
-        assert all(r["minhash"] is not None for r in sigs), method
+    sigs = minhash_signatures(docs).collect()
+    assert sorted(r["doc_id"] for r in sigs) == [1, 4]
+    assert all(r["minhash"] is not None for r in sigs)
     # and the two NULL-text docs must NOT pair up via a shared NULL band
     pairs = minhash_lsh_pairs(docs).collect()
     unpersist_dedup_caches()
@@ -446,7 +445,7 @@ def test_indexed_ann_legacy_single_table_layout(spark, tmp_path):
 
     from liblognorm_spark.functions.similarity import (
         _table_planes,
-        bucket_from_planes,
+        bucket_sql,
         lsh_topk,
         lsh_topk_indexed,
     )
@@ -457,7 +456,7 @@ def test_indexed_ann_legacy_single_table_layout(spark, tmp_path):
     planes = _table_planes(64, 6, 1)[0]
     emb.select(
         "vec_id", "embedding",
-        bucket_from_planes(FF.col("embedding"), planes).alias("bkt"),
+        FF.expr(bucket_sql("`embedding`", planes)).alias("bkt"),
     ).write.partitionBy("bkt").parquet(path)
     scan = [tuple(r) for r in lsh_topk(emb, q, k=10).collect()]
     idx = [tuple(r) for r in lsh_topk_indexed(spark, path, q, k=10).collect()]
@@ -470,10 +469,14 @@ def test_ann_batch_adaptive_matches_single_query_adaptive(spark):
     """lsh_topk_batch_adaptive must return, per query, EXACTLY the rows
     lsh_topk_adaptive returns for that query vector (same histogram, same
     plan, same scores) — the batch path is a packaging of the single-query
-    plan into one corpus pass, never a different algorithm."""
+    plan into one corpus pass, never a different algorithm.  The same
+    holds for the fixed probe plan: lsh_topk_batch against lsh_topk
+    (6 planes, 2 tables, hamming 1), through the shared batch executor."""
     from liblognorm_spark.functions.similarity import (
         bucket_histogram,
+        lsh_topk,
         lsh_topk_adaptive,
+        lsh_topk_batch,
         lsh_topk_batch_adaptive,
     )
 
@@ -488,15 +491,44 @@ def test_ann_batch_adaptive_matches_single_query_adaptive(spark):
     hist = bucket_histogram(emb, dim, nplanes=8, n_tables=8)
     qids = sorted(by_q)
     assert len(qids) >= 3
+    qvecs = {}
     for qid in qids:
         qv = [float(x) for x in
               emb.where(F.col("vec_id") == qid).head()["embedding"]]
+        qvecs[qid] = qv
         single = [(r["vec_id"], r["cos_micros"]) for r in
                   lsh_topk_adaptive(emb, qv, k=10, nplanes=8, n_tables=8,
                                     hist=hist).collect()]
         got = sorted(by_q[qid], key=lambda x: (-x[1], x[0]))
         assert got == single, f"query {qid} differs"
+
+    fixed = dict(nplanes=6, probe_hamming=1, n_tables=2)
+    by_q_fixed = {}
+    for r in lsh_topk_batch(emb, queries, dim=dim, k=10, **fixed).collect():
+        by_q_fixed.setdefault(r["query_id"], []).append(
+            (r["vec_id"], r["cos_micros"]))
+    assert sorted(by_q_fixed) == qids
+    for qid in qids:
+        single = [(r["vec_id"], r["cos_micros"]) for r in
+                  lsh_topk(emb, qvecs[qid], k=10, **fixed).collect()]
+        got = sorted(by_q_fixed[qid], key=lambda x: (-x[1], x[0]))
+        assert got == single, f"fixed plan: query {qid} differs"
     emb.unpersist()
+
+
+@pytest.mark.parametrize("bad", [float("nan"), float("inf"), float("-inf")])
+def test_ann_rejects_non_finite_query(spark, bad):
+    """A NaN or ±inf query element has no SQL literal form: building the
+    query must raise a ValueError naming the value, never emit a plan
+    that scores every row as NULL or NaN."""
+    from liblognorm_spark.functions.similarity import brute_force_topk, lsh_topk
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    q = [float(x) for x in emb.where(F.col("vec_id") == 0).head()["embedding"]]
+    q[3] = bad
+    for topk in (brute_force_topk, lsh_topk):
+        with pytest.raises(ValueError, match=re.escape(repr(bad))):
+            topk(emb, q, k=10)
 
 
 # ------------------------------------------- exact substring spans
