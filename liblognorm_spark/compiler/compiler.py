@@ -342,28 +342,13 @@ class CompiledRule:
     rule: Rule
     pattern: Optional[re.Pattern]  # None -> walker-only rule
     specs: list  # list[FieldSpec]
-    prefilter: str  # literal prefix for cheap vectorized candidate filtering
+    prefilter: str  # unnamed leading literal: keys the matcher's dispatch trie
     frag: str = ""  # the raw fragment (for master-alternation assembly)
     order: int = 0
-    # split at compile: simple captures are plain string assignments
-    simple_specs: list = field(default_factory=list)  # [(gname, name)]
-    complex_specs: list = field(default_factory=list)  # [FieldSpec]
     # constant per-rule event fields: event.tags + tag annotations
     extra_fields: dict = field(default_factory=dict)
 
     def finish(self, annotations: dict):
-        for fs in self.specs:
-            node = fs.node
-            if (
-                fs.sub is None
-                and not _needs_walker(node.ptype, node.params)
-                and "format" not in node.params
-                and "maxval" not in node.params
-                and node.ptype != "v2-iptables"
-            ):
-                self.simple_specs.append((fs.gname, fs.name))
-            else:
-                self.complex_specs.append(fs)
         if self.tags:
             self.extra_fields["event.tags"] = list(self.tags)
             for tag in reversed(self.tags):  # reverse order, annot.c:229
@@ -381,7 +366,9 @@ class CompiledRule:
 
 
 def _literal_prefix(seq) -> str:
-    if seq and isinstance(seq[0], PNode) and seq[0].ptype == "literal":
+    """The unnamed leading literal every match must start with ("" if the
+    rule starts with a motif, a named literal or an alternative)."""
+    if seq and _is_plain_lit(seq[0]):
         return seq[0].params["text"]
     return ""
 
@@ -590,25 +577,6 @@ class MatchCohort:
 # ------------------------------------------------------------ rule ordering
 
 
-def _token_stream(rule: Rule):
-    """Rule -> tokens for trie ordering: literals expand per-char
-    (src/samp.c:320-325: one PDAG node per literal char)."""
-    out = []
-    for item in rule.seq:
-        if isinstance(item, Alt):
-            ident = _json.dumps(
-                [[_node_ident(n) for n in s if isinstance(n, PNode)] for s in item.alts],
-                sort_keys=True,
-            )
-            out.append((item.prio, "alt:" + ident))
-        elif item.ptype == "literal" and item.name is None:
-            for ch in item.params["text"]:
-                out.append((item.prio, "lit:" + ch))
-        else:
-            out.append((item.prio, _node_ident(item)))
-    return out
-
-
 def _node_ident(n: PNode) -> str:
     params = {k: v for k, v in n.params.items() if k not in ("parser_seq", "while_seq")}
     return n.ptype + ":" + str(n.name) + ":" + _json.dumps(params, sort_keys=True, default=str)
@@ -620,8 +588,10 @@ def order_rules(rules: list[Rule]) -> list[int]:
     root: dict = {"children": {}, "rules": []}
     for idx, rule in enumerate(rules):
         node = root
-        for tok in _token_stream(rule):
-            key = tok
+        # the same tokens MatchCohort.build shares prefixes on: literals
+        # split per char (src/samp.c:320-325: one PDAG node per char)
+        for item in _expand_items(rule.seq):
+            key = _edge_key(item)
             if key not in node["children"]:
                 node["children"][key] = {"children": {}, "rules": [], "ins": len(node["children"])}
             node = node["children"][key]

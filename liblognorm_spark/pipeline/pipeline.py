@@ -25,6 +25,7 @@ from liblognorm_spark.compiler.compiler import compile_rulebase
 from liblognorm_spark.pipeline.fixture_rulebase import routing_rulebase
 from liblognorm_spark.rulebase.loader import Rulebase
 from liblognorm_spark.runtime.matcher import normalize_df
+from liblognorm_spark.sources.readers import missing_data_source
 
 # deterministic enrichment lookup tables (FIXTURES.md §1)
 LANG_MAP = [
@@ -93,20 +94,26 @@ def aggregate_stage(routed):
     return routed.groupBy("sink").agg(F.count("*").alias("n")).orderBy("sink")
 
 
-def write_sinks(routed, out_dir: str, fmt: str = "parquet"):
+def write_sinks(routed, out_dir: str, fmt: str = "parquet") -> str:
     """Single-pass fan-out: partitionBy(sink) writes one directory per sink.
+    Returns the format actually written.
 
-    Iceberg is used when its catalog jars are on the classpath (not in this
-    image); parquet directory layout is the fallback with identical
-    partition semantics."""
+    A non-parquet `fmt` (e.g. iceberg) is written through its data source.
+    When that source's jar is not on the classpath, the parquet directory
+    layout, with identical partition semantics, is written instead; any
+    other failure propagates."""
+    from py4j.protocol import Py4JJavaError
+
     writer = routed.write.mode("overwrite").partitionBy("sink")
-    try:
-        if fmt == "iceberg":
-            writer.format("iceberg").save(out_dir)
-            return
-    except Exception:
-        pass
+    if fmt != "parquet":
+        try:
+            writer.format(fmt).save(out_dir)
+            return fmt
+        except Py4JJavaError as exc:
+            if not missing_data_source(exc):
+                raise
     writer.parquet(out_dir)
+    return "parquet"
 
 
 def run_pipeline(spark, pages, out_dir: str | None = None, rulebase_text: str | None = None):

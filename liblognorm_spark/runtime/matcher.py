@@ -7,16 +7,24 @@ Execution model (the Spark-first replacement for the reference's per-message
   and shipped to executors inside the ``pandas_udf`` closure — the
   broadcast-once / read-many design of the reference's immutable PDAG
   (doc/pdag_implementation_model.rst:117-123).
-* Matching runs per Arrow batch: ONE anchored fullmatch per row against
-  each trie-factored cohort pattern (prefix sharing + priority branch
-  order, the PDAG discipline); the matched rule is identified by its
-  marker group via ``lastindex`` and extraction runs only on confirmed
-  matches (two-stage detect-then-extract, same shape as the reference's
-  stage-one/stage-two parsers, src/parser.c:2276-2318).
-* Rows whose regex match fails value-dependent validation (Reject) and
-  rows matching no cohort fall back to the exact-semantics walker over a
-  prefix-indexed candidate set, which also produces the
-  ``unparsed-data`` longest-parse diagnostics.
+* Every row takes one of four paths, chosen per Arrow batch:
+
+  - **cohort alternation**: one char-trie over the rules' leading
+    literals routes the row to the prefix-compatible cohorts, then ONE
+    anchored fullmatch per row against each trie-factored cohort pattern
+    (prefix sharing + priority branch order, the PDAG discipline); the
+    matched rule is identified by its marker group via ``lastindex`` and
+    extraction runs only on confirmed matches (two-stage
+    detect-then-extract, same shape as the reference's stage-one/stage-two
+    parsers, src/parser.c:2276-2318);
+  - **walker-only rule**: a rule no regex can express is routed by the same
+    trie and tried in priority order with the exact walker;
+  - **walker fallback**: rows matching no cohort, and rows whose regex
+    match fails value-dependent validation (Reject), run the exact walker
+    over the rules whose leading literal prefixes them, which also
+    produces the ``unparsed-data`` longest-parse diagnostics;
+  - **memoized unmatched**: a fallback result seen before (by full text)
+    is reused from a bounded cross-batch memo.
 
 No per-row Python crosses the Spark API surface: the entry point is a
 struct-returning scalar pandas_udf (``normalize_df``) over Arrow record
@@ -25,7 +33,6 @@ batches.
 
 from __future__ import annotations
 
-import bisect
 import json as _json
 
 import numpy as np
@@ -33,6 +40,7 @@ import pandas as pd
 
 from liblognorm_spark.compiler.compiler import (
     CompiledRulebase,
+    MatchCohort,
     _NOT_PART,
     compile_rulebase,
 )
@@ -46,14 +54,6 @@ MATCH_FIELDS_DDL = (
     "unparsed_data string, originalmsg string, parsed_to int, "
     "rb_file string, rb_line int"
 )
-
-
-def _finalize_event(crb: CompiledRulebase, cr, ev: dict) -> dict:
-    """Add event.tags + tag-driven annotations (src/pdag.c:1664-1671,
-    annot.c:214-239) — precomputed per rule at compile time."""
-    if cr.extra_fields:
-        ev.update(cr.extra_fields)
-    return ev
 
 
 def _dumps_std(ev: dict) -> str:
@@ -81,246 +81,110 @@ except ImportError:  # pragma: no cover
     _dumps = _dumps_std
 
 
-def _fallback_index(crb: CompiledRulebase):
-    """Char-trie over leading-literal prefixes for the walker fallback:
-    candidates(text) = rules whose prefix prefixes the text, in priority
-    order, plus rules without a leading literal.  Cached on the rulebase."""
-    idx = getattr(crb, "_fb_index", None)
-    if idx is not None:
-        return idx
-    from liblognorm_spark.rulebase.loader import PNode
-
-    root: dict = {}
-    always: list = []
-    order_of: dict = {}
-    for pos, rule in enumerate(crb.ordered_rules):
-        order_of[id(rule)] = pos
-        seq = rule.seq
-        pref = ""
-        if seq and isinstance(seq[0], PNode) and seq[0].ptype == "literal" and seq[0].name is None:
-            pref = seq[0].params["text"]
-        if not pref:
-            always.append(rule)
-            continue
-        node = root
-        for ch in pref:
-            node = node.setdefault(ch, {})
-        node.setdefault("\0rules", []).append(rule)
-
-    def candidates(text: str):
-        """Returns (rules, lit_credit): candidate rules in priority order
-        plus the trie descent depth — the max common prefix between the
-        text and ANY leading literal, i.e. the parsedTo credit the pruned
-        rules' per-char literal nodes would have produced (the reference
-        credits partial literal progress; see walker._literal_partial_credit)."""
-        found = list(always)
-        node = root
-        depth = 0
-        for ch in text:
-            node = node.get(ch)
-            if node is None:
-                break
-            depth += 1
-            rs = node.get("\0rules")
-            if rs:
-                found.extend(rs)
-        if len(found) > 1:
-            found.sort(key=lambda r: order_of[id(r)])
-        return found, depth
-
-    crb._fb_index = candidates
-    return candidates
-
-
-_DISPATCH_MAX_DEPTH = 16  # leading-literal chars indexed per rule
+_DISPATCH_MAX_DEPTH = 16  # leading-literal chars a dispatch descends
+_DISPATCH_MEMO_MAX = 65536
 # cross-batch unmatched-diagnostics memo bounds: entry count AND total key
 # bytes (webtext rows can be multi-KB; a count-only cap could hold
 # hundreds of MB per worker)
 _FB_MEMO_MAX = 65536
 _FB_MEMO_MAX_BYTES = 32 << 20
-_EMPTY_SET: frozenset = frozenset()
+# per-node answers, stored beside the one-char edge keys (never collide)
+_COHORTS = "\0c"  # cohort positions whose literal window prefixes the path
+_RULES = "\0r"  # rules whose whole literal prefixes the path, in match order
 
 
-def _cohort_dispatch(crb: CompiledRulebase):
-    """Char-trie over the leading literals of every regexable rule, mapping
-    a message to the SET of cohort positions that could possibly match it.
+def _literal_trie(crb: CompiledRulebase):
+    """One char-trie over the rules' unnamed leading literals
+    (``CompiledRule.prefilter``), answering both per-row routing questions:
 
-    Without this, a row scans every cohort pattern sequentially (O(R/64)
-    regex calls per row — the measured scale cliff at 512-2048 rules).
-    With it, a row descends the trie once (~prefix-length dict hops) and
-    tries only prefix-compatible cohorts; cohorts containing any rule
-    without a plain leading literal are 'wildcard' and always tried.
-    Cohort ORDER is preserved (candidates are emitted sorted by cohort
-    position), so first-match-wins semantics are untouched.  Cached on the
-    compiled rulebase."""
-    cached = getattr(crb, "_dispatch", None)
-    if cached is not None:
-        return cached
-    from liblognorm_spark.compiler.compiler import MatchCohort
-    from liblognorm_spark.rulebase.loader import PNode
+    * ``dispatch(text)``: the sorted tuple of cohort positions (regex
+      cohorts and walker-only rules) that could match `text`, judged on
+      its first _DISPATCH_MAX_DEPTH chars.  Without it every row would try
+      every cohort (O(R/64) regex calls per row, the measured scale cliff
+      at 512-2048 rules).  A rule without a leading literal puts its
+      cohort at the root, so that cohort is a candidate for every row.
+    * ``candidates(text)``: (rules, lit_credit) for the walker fallback:
+      the rules whose whole literal prefixes `text` plus the rules without
+      one, in match order, and the descent depth -- the longest common
+      prefix of the text with ANY leading literal, i.e. the parsedTo
+      credit the pruned rules' per-char literal nodes would have produced
+      (the reference credits partial literal progress; see
+      walker._literal_partial_credit).
 
+    Every node holds both answers for its whole path, so a query is one
+    descent with no set building.  Built lazily on the worker and cached
+    on the rulebase, so the shipped rulebase does not carry it."""
+    trie = getattr(crb, "_trie", None)
+    if trie is not None:
+        return trie
     root: dict = {}
-    wildcard: list[int] = []
-    for ci, cohort in enumerate(crb.cohorts):
-        if not isinstance(cohort, MatchCohort):
-            continue  # walker-only rules keep their own prefilter path
-        is_wild = False
-        prefixes = set()
-        for cr in cohort.rules:
-            seq = cr.rule.seq
-            if (seq and isinstance(seq[0], PNode) and seq[0].ptype == "literal"
-                    and seq[0].name is None and seq[0].params.get("text")):
-                prefixes.add(seq[0].params["text"][:_DISPATCH_MAX_DEPTH])
-            else:
-                is_wild = True
-        if is_wild:
-            wildcard.append(ci)
-            continue
-        for pref in prefixes:
-            node = root
-            for ch in pref:
-                node = node.setdefault(ch, {})
-            node.setdefault("\0c", set()).add(ci)
 
-    # propagate cumulative candidate sets down the trie so a descent does
-    # ZERO set unions — each node stores the union over its whole path
-    # (ancestor sets are shared objects when a node adds nothing new)
-    def _propagate(node: dict, inherited: frozenset):
-        own = node.get("\0c")
-        cum = (inherited | own) if own else inherited
-        node["\0cum"] = cum
-        for k, child in node.items():
-            if k not in ("\0c", "\0cum"):
-                _propagate(child, cum)
-
-    _propagate(root, frozenset())
-
-    def dispatch(text: str):
-        """Cohort positions whose rule literals prefix `text` (unsorted)."""
+    def node_at(lit: str) -> dict:
         node = root
-        cum = _EMPTY_SET
+        for ch in lit:
+            node = node.setdefault(ch, {})
+        return node
+
+    for ci, cohort in enumerate(crb.cohorts):
+        members = cohort.rules if isinstance(cohort, MatchCohort) else (cohort,)
+        for cr in members:
+            node_at(cr.prefilter[:_DISPATCH_MAX_DEPTH]).setdefault(_COHORTS, set()).add(ci)
+    for pos, cr in enumerate(crb.rules):  # crb.rules is in match order
+        node_at(cr.prefilter).setdefault(_RULES, []).append(pos)
+
+    # give every node the answers for its whole path (iteratively: a
+    # literal can be longer than the recursion limit); a node that adds
+    # nothing shares its parent's tuples
+    ordered = crb.ordered_rules
+    stack = [(root, (), (), ())]
+    while stack:
+        node, cohorts, positions, rules = stack.pop()
+        own = node.pop(_COHORTS, None)
+        if own:
+            cohorts = tuple(sorted(own.union(cohorts)))
+        own = node.pop(_RULES, None)
+        if own:
+            positions = tuple(sorted(own + list(positions)))
+            rules = tuple(ordered[i] for i in positions)
+        stack.extend((child, cohorts, positions, rules) for child in node.values())
+        node[_COHORTS] = cohorts
+        node[_RULES] = rules
+
+    def dispatch(text: str) -> tuple:
+        node = root
+        cohorts = root[_COHORTS]
         for ch in text[:_DISPATCH_MAX_DEPTH]:
             node = node.get(ch)
             if node is None:
                 break
-            cum = node["\0cum"]
-        return cum
+            cohorts = node[_COHORTS]
+        return cohorts
 
-    crb._dispatch = (dispatch, frozenset(wildcard))
-    return crb._dispatch
+    def candidates(text: str):
+        node = root
+        depth = 0
+        for ch in text:
+            nxt = node.get(ch)
+            if nxt is None:
+                break
+            node = nxt
+            depth += 1
+        return node[_RULES], depth
 
-
-_DISPATCH_MEMO_MAX = 65536
+    crb._trie = (dispatch, candidates)
+    return crb._trie
 
 
 def _dispatch_memo(crb: CompiledRulebase) -> dict:
-    """prefix -> (tuple(cohort ids), fold entry | None) memo, bounded, kept
-    across batches on the compiled rulebase.  Log streams repeat their
-    16-char prefixes (program/host names) for hours, so after warmup a
-    batch's dispatch is pure dict hits — at 8192 rules the trie descent per
-    distinct prefix was ~15%% of matched-heavy batch time.  The fold entry
-    (see _fold_entry) rides in the SAME memo value so the sole-rule fast
-    path costs zero extra lookups per distinct prefix."""
+    """prefix -> dispatch tuple memo, bounded, kept across batches on the
+    compiled rulebase.  Log streams repeat their 16-char prefixes
+    (program/host names) for hours, so after warmup a batch's dispatch is
+    pure dict hits -- at 8192 rules the trie descent per distinct prefix
+    was ~15% of matched-heavy batch time."""
     memo = getattr(crb, "_dispatch_memo_cache", None)
     if memo is None:
         memo = crb._dispatch_memo_cache = {}
     return memo
-
-
-def _fold_index(crb: CompiledRulebase):
-    """prefilter -> [CompiledRule] map + sorted prefilter list, cached on
-    the rulebase.  `wildcard` is True when ANY rule has no literal prefix
-    (leading motif / alternative): such a rule is prefix-compatible with
-    every message, so no prefix can ever prove a sole candidate and the
-    fold is disabled globally (the check is one cached-tuple read)."""
-    idx = getattr(crb, "_fold_idx", None)
-    if idx is None:
-        by_pref: dict = {}
-        wildcard = False
-        for cr in crb.rules:
-            p = cr.prefilter
-            if not p:
-                wildcard = True
-            by_pref.setdefault(p, []).append(cr)
-        sorted_prefs = sorted(by_pref) if not wildcard else []
-        # only the literal-prefix lengths that actually occur need probing
-        # (real rulebases have a handful); scanning every 1..len(u) cut
-        # prefix cost the cold path can't afford
-        pref_lens = sorted({len(p) for p in by_pref})
-        idx = crb._fold_idx = (by_pref, sorted_prefs, wildcard, pref_lens)
-    return idx
-
-
-def _fold_entry(crb: CompiledRulebase, u: str):
-    """If the dispatch prefix `u` PROVES (by literal-prefix analysis over
-    the whole rulebase) that exactly one rule can match any text starting
-    with `u`, return a prepared sole-rule fast-path entry; else None.
-
-    Soundness: a rule is counted compatible with `u` when its literal
-    prefix is a prefix of `u` (motifs could match anything after it) or
-    extends `u` (u is the truncated dispatch window).  That over-counts —
-    never under-counts — so a fold only exists when NO other rule could
-    possibly match, making rule-priority order irrelevant for these rows:
-    matching the sole rule's own pattern directly is exactly equivalent to
-    the cohort walk, minus the trie alternation over rules that cannot
-    match anyway.  This is the round-5 large-rulebase lever: with 8192
-    distinct program-name rules, the cohort pattern still carries a 64-way
-    branch per row; the sole-rule pattern does not."""
-    by_pref, sorted_prefs, wildcard, pref_lens = _fold_index(crb)
-    if wildcard or not u:
-        return None
-    cands: list = []
-    lu = len(u)
-    for L in pref_lens:
-        if L > lu:
-            break
-        rs = by_pref.get(u[:L])
-        if rs:
-            cands.extend(rs)
-            if len(cands) > 1:
-                return None
-    lo = bisect.bisect_left(sorted_prefs, u)
-    for i in range(lo, len(sorted_prefs)):
-        p = sorted_prefs[i]
-        if not p.startswith(u):
-            break
-        if len(p) > len(u):  # == u already counted in the loop above
-            cands.extend(by_pref[p])
-            if len(cands) > 1:
-                return None
-    if len(cands) != 1:
-        return None
-    cr = cands[0]
-    if cr.pattern is None:
-        return None  # walker-only sole rule: keep the exact walker path
-    # the entry tail is per-RULE, not per-prefix: cache it so the many
-    # prefixes that map to one rule (sshd[1], sshd[2], ... with a 16+ char
-    # dispatch window) build it once
-    ent = getattr(cr, "_fold_ent", None)
-    if ent is None:
-        gi = cr.pattern.groupindex
-        simple_rev = tuple((gi[g], nm) for g, nm in reversed(cr.simple_specs))
-        # constant-JSON tail: extra_fields (tags + annotations) are per-rule
-        # constants serialized identically on every matched row.  When the
-        # rule is simple (flat string captures only — parsed keys are
-        # exactly the spec names) and no extra key collides with a parsed
-        # field name, the serialized tail can be byte-concatenated after
-        # the parsed fields instead of dict-updated + reserialized per row.
-        # Key ORDER in the output is unchanged: parsed fields first, then
-        # extras — same as the ev.update() path.
-        tail = None
-        if _ORJSON_DUMPS is not None and cr.extra_fields and not cr.complex_specs:
-            names = {nm for _, nm in cr.simple_specs}
-            if names.isdisjoint(cr.extra_fields):
-                try:
-                    tail = b"," + _ORJSON_DUMPS(cr.extra_fields)[1:]
-                except TypeError:
-                    tail = None
-        ent = cr._fold_ent = (
-            cr.pattern.fullmatch, simple_rev, tuple(reversed(cr.specs)),
-            bool(cr.complex_specs), cr.extra_fields, cr.rule_id, cr.rule,
-            tail)
-    return ent
 
 
 def _exec_path_of(crb: CompiledRulebase, rule) -> str:
@@ -390,9 +254,7 @@ def match_batch(crb: CompiledRulebase, texts: pd.Series,
     remaining = notna.copy()
     need_walker = np.zeros(n, dtype=bool)
     types = crb.types
-    annots = crb.annotations
 
-    from liblognorm_spark.compiler.compiler import MatchCohort
     from liblognorm_spark.runtime.walker import (
         WalkState,
         flat_items,
@@ -444,193 +306,51 @@ def match_batch(crb: CompiledRulebase, texts: pd.Series,
     # cohort pattern sequentially.  The dispatch result depends only on the
     # first _DISPATCH_MAX_DEPTH chars, and log streams repeat those heavily
     # (program/host prefixes), so the trie descends once per DISTINCT
-    # prefix (factorize groups rows C-side) — and only on first sight: the
+    # prefix (factorize groups rows C-side) -- and only on first sight: the
     # per-prefix cohort tuple is memoized across batches (bounded), making
-    # steady-state dispatch pure dict hits.
-    dispatch, wild_cohorts = _cohort_dispatch(crb)
+    # steady-state dispatch pure dict hits.  Rows are then grouped by their
+    # dispatch tuple with ONE vectorized argsort; each cohort gets one
+    # row-index slice per distinct tuple naming it (at 8192 rules, per-
+    # prefix chunk lists cost ~15% of batch time in thousands of tiny
+    # np.concatenate calls).
+    dispatch, candidates = _literal_trie(crb)
     dmemo = _dispatch_memo(crb)
     dmemo_get = dmemo.get
-    # single-cohort rows (the overwhelmingly common case) are routed by ONE
-    # vectorized argsort over a per-row cohort-id array — at 8192 rules the
-    # old per-unique chunk lists cost ~15% of batch time in thousands of
-    # tiny np.concatenate calls.  Uniques dispatching to >1 cohort keep the
-    # chunk-list path (cand_multi).
-    cand_arr: dict[int, np.ndarray] = {}
-    cand_multi: dict[int, list] = {}
-    fold_uniques: list = []
-    notna_idx = np.flatnonzero(remaining)
+    routed: dict[int, list] = {}  # cohort position -> row-index arrays
+    notna_idx = np.flatnonzero(notna)
     if len(notna_idx):
         keys = np.array([t[:_DISPATCH_MAX_DEPTH] for t in tvals[notna_idx]],
                         dtype=object)
         codes, uniques = pd.factorize(keys)
         dmemo_room = _DISPATCH_MEMO_MAX - len(dmemo)
-        if len(uniques) <= 64:
-            # few distinct prefixes (tiny rulebase or homogeneous batch):
-            # the chunk-list path's handful of np.concatenate calls is
-            # cheaper than the vectorized argsort's fixed overhead
-            order = np.argsort(codes, kind="stable")
-            sorted_idx = notna_idx[order]
-            counts = np.bincount(codes, minlength=len(uniques))
-            start = 0
-            for k, cnt in enumerate(counts.tolist()):
-                chunk = sorted_idx[start:start + cnt]
-                start += cnt
-                u = uniques[k]
-                ent = dmemo_get(u)
-                if ent is None:
-                    if dmemo_room > 0:
-                        # the fold entry is only worth BUILDING when it
-                        # will be memoized: un-cached, its construction
-                        # cost dwarfs the ~2-row payoff
-                        ent = (tuple(dispatch(u)), _fold_entry(crb, u))
-                        dmemo[u] = ent
-                        dmemo_room -= 1
-                    else:
-                        ent = (tuple(dispatch(u)), None)
-                # the small-prefix-count path skips the sole-rule fold:
-                # with <=64 uniques the cohort chunk lists amortize fine
-                for ci in ent[0]:
-                    cand_multi.setdefault(ci, []).append(chunk)
-        else:
-            ucids = np.empty(len(uniques), dtype=np.int64)
-            multi_uniques: list = []
-            fold_uniques: list = []
-            for k, u in enumerate(uniques.tolist()):
-                ent = dmemo_get(u)
-                if ent is None:
-                    if dmemo_room > 0:
-                        ent = (tuple(dispatch(u)), _fold_entry(crb, u))
-                        dmemo[u] = ent
-                        dmemo_room -= 1
-                    else:
-                        ent = (tuple(dispatch(u)), None)
-                cis, fold = ent
-                if fold is not None:
-                    ucids[k] = -3  # sole-rule fast path, rows taken below
-                    fold_uniques.append((k, fold))
-                elif len(cis) == 1:
-                    ucids[k] = cis[0]
-                elif not cis:
-                    ucids[k] = -1  # no candidate cohort: straight to fallback
-                else:
-                    ucids[k] = -2
-                    multi_uniques.append((k, cis))
-            if len(fold_uniques) < len(uniques):
-                row_cid = ucids[codes]
-                order = np.argsort(row_cid, kind="stable")
-                rc_sorted = row_cid[order]
-                rows_sorted = notna_idx[order]
-                cids_present, seg_starts = np.unique(rc_sorted, return_index=True)
-                seg_ends = np.append(seg_starts[1:], len(rc_sorted))
-                for cid, s, e in zip(cids_present.tolist(), seg_starts.tolist(),
-                                     seg_ends.tolist()):
-                    if cid >= 0:
-                        cand_arr[cid] = rows_sorted[s:e]
-            # (every unique folded -> no cohort-routing argsort needed)
-            if multi_uniques or fold_uniques:
-                order_c = np.argsort(codes, kind="stable")
-                sorted_idx = notna_idx[order_c]
-                # ONE bulk tolist: the fold loop slices this plain list per
-                # unique (C-level, ~2-3 rows each) — per-unique numpy
-                # slice+tolist cost ~6% of batch time at 8192 prefixes
-                rows_by_code = sorted_idx.tolist()
-                counts = np.bincount(codes, minlength=len(uniques))
-                starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-                counts_l = counts.tolist()
-                starts_l = starts.tolist()
-                for k, cis in multi_uniques:
-                    chunk = sorted_idx[starts[k]:starts[k] + counts[k]]
-                    for ci in cis:
-                        cand_multi.setdefault(ci, []).append(chunk)
-
-    # sole-rule fast path: rows whose dispatch prefix proves a single
-    # candidate rule match that rule's OWN pattern directly — same
-    # extraction semantics as the cohort body below, minus the cohort
-    # trie's alternation over rules the prefix already ruled out.  A miss
-    # here is definitive (the one compatible rule failed), so the row
-    # falls through to the unmatched-diagnostics path like any other
-    # regex miss; Reject still routes to the exact walker.
-    if fold_uniques:
-        dumps = _dumps
-        odumps = _ORJSON_DUMPS
-        not_part = _NOT_PART
-        attach_ = attach
-        done_here: list = []
-        done_add = done_here.append
-        for k, ent in fold_uniques:
-            (ffullmatch, fsimple_rev, fspecs_rev, fhas_complex,
-             fextra, frid, frule, ftail) = ent
-            # the tail shortcut changes key ORDER if decoration inserts
-            # keys after extras; decoration is off on the Spark hot path
-            use_tail = ftail is not None and not decorate_needed
-            s = starts_l[k]
-            for pos in rows_by_code[s:s + counts_l[k]]:
-                t = tvals[pos]
-                m = ffullmatch(t)
-                if m is None:
-                    continue
-                try:
-                    ev: dict = {}
-                    if fhas_complex:
-                        for fs in fspecs_rev:
-                            v = fs.extract(m, t, types)
-                            if v is not_part:
-                                continue
-                            attach_(ev, fs.name, v)
-                    else:
-                        group = m.group
-                        for gi, name in fsimple_rev:
-                            v = group(gi)
-                            if v is not None:
-                                ev[name] = v
-                except Reject:
-                    need_walker[pos] = True
-                    done_add(pos)
-                    continue
-                if use_tail and ev:
-                    try:
-                        fields_json[pos] = (odumps(ev)[:-1] + ftail).decode()
-                    except TypeError:
-                        ev.update(fextra)
-                        fields_json[pos] = _dumps_std(ev)
-                    rule_id[pos] = frid
-                    parsed_to[pos] = len(t)
-                    done_add(pos)
-                    continue
-                if fextra:
-                    ev.update(fextra)
-                if decorate_needed:
-                    _decorate(ev, frule, t)
-                rule_id[pos] = frid
-                if odumps is not None:
-                    try:
-                        fields_json[pos] = odumps(ev).decode()
-                    except TypeError:
-                        fields_json[pos] = _dumps_std(ev)
-                else:
-                    fields_json[pos] = dumps(ev)
-                parsed_to[pos] = len(t)
-                done_add(pos)
-        if done_here:
-            remaining[done_here] = False
+        route_ids: dict = {}  # dispatch tuple -> route id
+        uroute: list = []
+        for u in uniques.tolist():
+            cis = dmemo_get(u)
+            if cis is None:
+                cis = dispatch(u)
+                if dmemo_room > 0:
+                    dmemo[u] = cis
+                    dmemo_room -= 1
+            uroute.append(route_ids.setdefault(cis, len(route_ids)))
+        row_route = np.array(uroute, dtype=np.int64)[codes]
+        rows_sorted = notna_idx[np.argsort(row_route, kind="stable")]
+        counts = np.bincount(row_route, minlength=len(route_ids)).tolist()
+        start = 0
+        for cis, cnt in zip(route_ids, counts):
+            for ci in cis:
+                routed.setdefault(ci, []).append(rows_sorted[start:start + cnt])
+            start += cnt
 
     for ci, cohort in enumerate(crb.cohorts):
-        if not remaining.any():
-            break
+        parts = routed.get(ci)
+        if parts is None:
+            continue
+        arr = parts[0] if len(parts) == 1 else np.concatenate(parts)
+        # tolist(): the row loops below index python lists per row, and
+        # np.int64 positions pay a conversion on every access
+        idxs = arr[remaining[arr]].tolist()
         if isinstance(cohort, MatchCohort):
-            if ci in wild_cohorts:
-                idxs = np.flatnonzero(remaining).tolist()
-            else:
-                arr = cand_arr.get(ci)
-                parts = cand_multi.get(ci)
-                if parts:
-                    arr = (np.concatenate([arr] + parts) if arr is not None
-                           else np.concatenate(parts))
-                elif arr is None:
-                    continue
-                # tolist(): the row loop below indexes python lists per row,
-                # and np.int64 positions pay a conversion on every access
-                idxs = arr[remaining[arr]].tolist()
             # one anchored fullmatch per row against the trie-factored
             # pattern for the whole cohort; the record is inlined (the
             # _record call itself was measurable at matched-heavy batches)
@@ -699,14 +419,12 @@ def match_batch(crb: CompiledRulebase, texts: pd.Series,
                 remaining[done_here] = False
         else:
             cr = cohort  # walker-only rule: exact per-row match
-            if cr.prefilter:
-                pref = texts.str.startswith(cr.prefilter, na=False).to_numpy()
-                idxs = np.flatnonzero(remaining & pref).tolist()
-            else:
-                idxs = np.flatnonzero(remaining).tolist()
+            pref = cr.prefilter  # dispatch checked at most 16 chars of it
             flat = flat_items(cr.rule)
             for pos in idxs:
                 t = tvals[pos]
+                if not t.startswith(pref):
+                    continue
                 st = WalkState(text=t, strlen=len(t), types=types)
                 ev = {}
                 ok = (walk_flat(st, flat, ev) if flat is not None
@@ -718,7 +436,6 @@ def match_batch(crb: CompiledRulebase, texts: pd.Series,
     # the prefix-index candidate set (rules whose leading literal can
     # possibly match); the pruned rules' partial-literal parsedTo credit is
     # carried over from the trie descent depth
-    index = _fallback_index(crb)
     # memoized by FULL text: the result is a pure function of the text
     # (same rulebase), and log streams repeat unparsed lines heavily — a
     # malformed heartbeat repeats for hours — so identical rows pay one
@@ -740,7 +457,7 @@ def match_batch(crb: CompiledRulebase, texts: pd.Series,
         t = tvals[pos]
         res = fb_memo.get(t)
         if res is None:
-            cand_rules, lit_credit = index(t)
+            cand_rules, lit_credit = candidates(t)
             rule, ev, pto = normalize_message(
                 cand_rules, t, crb.types, crb.annotations,
                 initial_parsed_to=lit_credit, v1_engine=crb.version == 1,

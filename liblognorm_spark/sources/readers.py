@@ -10,6 +10,19 @@ being present (not in this image) with parquet-directory fallback.
 from __future__ import annotations
 
 
+def missing_data_source(exc) -> bool:
+    """True iff the Py4JJavaError `exc` is Spark's DATA_SOURCE_NOT_FOUND:
+    the format's jar is not on the classpath (the wrapped Java exception
+    is a SparkClassNotFoundException).  Only this error may fall back to
+    the parquet layout; every other failure must propagate."""
+    from py4j.protocol import Py4JError
+
+    try:
+        return exc.java_exception.getCondition() == "DATA_SOURCE_NOT_FOUND"
+    except Py4JError:  # not a SparkThrowable: it has no condition
+        return False
+
+
 def read_logs(spark, path: str, fmt: str = "text", text_col: str = "value", schema=None):
     """Returns (df, text_col) ready for normalize_df."""
     from pyspark.sql import functions as F
@@ -29,9 +42,13 @@ def read_logs(spark, path: str, fmt: str = "text", text_col: str = "value", sche
     if fmt == "csv":
         return spark.read.csv(path, header=True), text_col
     if fmt == "iceberg":
+        from py4j.protocol import Py4JJavaError
+
         try:
             return spark.read.format("iceberg").load(path), text_col
-        except Exception:
+        except Py4JJavaError as exc:
+            if not missing_data_source(exc):
+                raise
             # iceberg jars absent: fall back to the parquet data dir layout
             return spark.read.parquet(path), text_col
     raise ValueError(f"unknown format {fmt!r}")

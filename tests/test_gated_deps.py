@@ -44,12 +44,90 @@ def test_iceberg_write_falls_back_to_parquet(spark, tmp_path):
         [("a", "s1"), ("b", "s1"), ("c", "s2")], "text string, sink string"
     )
     out = str(tmp_path / "sinks")
-    write_sinks(df, out, fmt="iceberg")
+    assert write_sinks(df, out, fmt="iceberg") == "parquet"
     back, _ = read_logs(spark, out, fmt="iceberg", text_col="text")
     assert back.count() == 3
     assert sorted(r["sink"] for r in back.select("sink").collect()) == ["s1", "s1", "s2"]
     # partition directories exist (the fan-out layout survived the fallback)
     assert any(d.startswith("sink=") for d in os.listdir(out))
+
+
+class _StubJavaError:
+    """Stands in for the Java throwable a Py4JJavaError wraps."""
+
+    _target_id = "o0"
+
+    def __init__(self, condition: str):
+        self.condition = condition
+
+    def getCondition(self):
+        return self.condition
+
+
+class _StubIO:
+    """Stands in for a DataFrameWriter / DataFrameReader whose non-parquet
+    save/load raises `exc`; records the parquet paths it is asked for."""
+
+    def __init__(self, exc):
+        self.exc = exc
+        self.parquet_paths = []
+
+    def mode(self, _):
+        return self
+
+    def partitionBy(self, *_):
+        return self
+
+    def format(self, _):
+        return self
+
+    def save(self, _):
+        raise self.exc
+
+    load = save
+
+    def parquet(self, path):
+        self.parquet_paths.append(path)
+
+
+def _java_error(condition: str):
+    from py4j.protocol import Py4JJavaError
+
+    return Py4JJavaError("stub", _StubJavaError(condition))
+
+
+@pytest.mark.parametrize("kind", ["python", "other-condition"])
+def test_sink_and_source_errors_propagate(kind):
+    """Only DATA_SOURCE_NOT_FOUND may fall back to parquet: any other
+    error from the iceberg writer or reader reaches the caller, and no
+    parquet is written or read."""
+    from types import SimpleNamespace
+
+    from liblognorm_spark.pipeline.pipeline import write_sinks
+    from liblognorm_spark.sources.readers import read_logs
+
+    exc = RuntimeError("disk full") if kind == "python" else _java_error(
+        "TABLE_OR_VIEW_NOT_FOUND")
+    writer = _StubIO(exc)
+    with pytest.raises(type(exc)):
+        write_sinks(SimpleNamespace(write=writer), "out", fmt="iceberg")
+    reader = _StubIO(exc)
+    with pytest.raises(type(exc)):
+        read_logs(SimpleNamespace(read=reader), "out", fmt="iceberg")
+    assert writer.parquet_paths == reader.parquet_paths == []
+
+
+def test_missing_data_source_falls_back_to_parquet():
+    from types import SimpleNamespace
+
+    from liblognorm_spark.pipeline.pipeline import write_sinks
+    from liblognorm_spark.sources.readers import read_logs
+
+    writer = _StubIO(_java_error("DATA_SOURCE_NOT_FOUND"))
+    assert write_sinks(SimpleNamespace(write=writer), "out", fmt="iceberg") == "parquet"
+    reader = _StubIO(_java_error("DATA_SOURCE_NOT_FOUND"))
+    read_logs(SimpleNamespace(read=reader), "out", fmt="iceberg")
+    assert writer.parquet_paths == reader.parquet_paths == ["out"]
 
 
 @pytest.mark.skipif(not HAS_ICEBERG, reason="iceberg-spark-runtime jar not on classpath")

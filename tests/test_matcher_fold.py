@@ -1,40 +1,71 @@
-"""Sole-rule prefix-fold equivalence (round 5, runtime/matcher.py).
+"""match_batch vs the exact walker on routing-sensitive rulebase shapes.
 
-The fold routes rows whose dispatch prefix PROVES a single candidate rule
-to that rule's own pattern, skipping the cohort alternation.  These tests
-pin that fold-on output is byte-identical to fold-off on the shapes that
-could break it: shared literal prefixes (no sole rule -> no fold), rules
-whose prefilter extends the dispatch window, walker-only rules, complex
-(validated) fields, annotations (constant-JSON tail path), near-miss rows
-(definitive fold miss -> unmatched diagnostics), and decoration options
-(tail shortcut disabled).
+Every row `match_batch` returns must equal what the reference-semantics
+walker (`normalize_message` over the whole rulebase in priority order)
+produces: the same rule, event, parsedTo and unparsed-data.  The shapes
+are the ones that could break the leading-literal dispatch: shared
+literal prefixes, rules without a leading literal (a candidate for every
+row), walker-only rules, literals longer than the 16-char dispatch
+window, complex (validated) fields with Reject fallbacks, annotations,
+near-miss rows and decoration options.  The test names are those of the
+former sole-rule fold's tests, whose fixtures they keep as inputs.
+Each batch is matched twice on one compiled rulebase, so the second pass
+runs on warm dispatch and unmatched-row memos.
 """
 
+import json
+
 import pandas as pd
-import pytest
 
 from liblognorm_spark.compiler.compiler import compile_rulebase
 from liblognorm_spark.rulebase.loader import Rulebase
 from liblognorm_spark.runtime import matcher as M
+from liblognorm_spark.runtime.walker import normalize_message
 
 
-def _run_both(rb_text: str, texts: list, **opts):
-    """match_batch with fold disabled vs enabled on fresh rulebases."""
+def _assert_matches_walker(rb_text: str, texts: list, **opts):
+    crb = compile_rulebase(Rulebase.from_string(rb_text))
     s = pd.Series(texts, dtype=object)
-    crb_off = compile_rulebase(Rulebase.from_string(rb_text))
-    crb_on = compile_rulebase(Rulebase.from_string(rb_text))
-    orig = M._fold_entry
+    fallback_texts = []
+
+    def recording(rules, text, *a, **k):
+        fallback_texts.append(text)
+        return normalize_message(rules, text, *a, **k)
+
+    M.normalize_message = recording
     try:
-        M._fold_entry = lambda crb, u: None
-        off = M.match_batch(crb_off, s, **opts)
+        out = M.match_batch(crb, s, **opts)
     finally:
-        M._fold_entry = orig
-    on = M.match_batch(crb_on, s, **opts)
-    return off, on, crb_on
+        M.normalize_message = normalize_message
+    assert out.equals(M.match_batch(crb, s, **opts))  # warm memos
+    # routing must reach every matching rule: the walker fallback only
+    # sees rows that no rule matches (no fixture has a rejected row that
+    # another rule matches)
+    assert all(out["rule_id"][texts.index(t)] == -1 for t in fallback_texts)
+    for i, t in enumerate(texts):
+        rule, ev, pto = normalize_message(
+            crb.ordered_rules, t, crb.types, crb.annotations,
+            v1_engine=crb.version == 1)
+        assert out["rule_id"][i] == (rule.rule_id if rule is not None else -1), t
+        assert out["parsed_to"][i] == pto, t
+        got = json.loads(out["fields_json"][i])
+        if rule is None:
+            assert out["unparsed_data"][i] == ev["unparsed-data"], t
+            assert out["originalmsg"][i] == t
+        else:
+            assert out["unparsed_data"][i] is None, t
+            if opts.get("add_originalmsg"):
+                assert got.pop("originalmsg") == t
+            meta = got.pop("metadata", {}).get("rule", {})
+            if opts.get("add_rule_location"):
+                assert meta["location"] == {"file": rule.rb_file, "line": rule.rb_line}
+            if opts.get("add_rule_mockup"):
+                assert meta["mockup"] == rule.raw
+        assert got == ev, t
+    return out
 
 
-# >64 distinct prefixes are needed to reach the vectorized fold path, so
-# every fixture pads with generated filler rules/rows.
+# filler rules/rows: >64 distinct dispatch prefixes per batch
 def _pad_rules(n=80):
     return "\n".join(
         f"rule=f{i}:filler{i}: %v:number%" for i in range(n))
@@ -44,46 +75,36 @@ def _pad_rows(n=80):
     return [f"filler{i}: {i}" for i in range(n)]
 
 
+# walker-only: a repeat with permitMismatchInParser has no regex twin
+_REPEAT = ('%{"name":"n","type":"repeat","parser":{"name":"x","type":"number"},'
+           '"while":{"type":"literal","text":":"},'
+           '"option.permitMismatchInParser":true}%')
+
+
 def test_fold_applies_and_matches_disabled_path():
     rb = "version=2\n" + _pad_rules() + "\n"
-    off, on, crb = _run_both(rb, _pad_rows() + ["fillerX: nope", "junk"])
-    assert off.equals(on)
-    memo = crb._dispatch_memo_cache
-    assert any(v[1] is not None for v in memo.values()), "no fold fired"
+    _assert_matches_walker(rb, _pad_rows() + ["fillerX: nope", "junk"])
 
 
 def test_shared_prefix_rules_never_fold():
-    # two rules share the full dispatch window -> no prefix proves a sole
-    # candidate -> fold must not fire, outputs identical
     rb = ("version=2\n"
           "rule=a:sshd[%pid:number%]: accepted %u:word%\n"
           "rule=b:sshd[%pid:number%]: failed %u:word%\n" + _pad_rules() + "\n")
-    texts = ["sshd[1]: accepted root", "sshd[2]: failed eve"] + _pad_rows()
-    off, on, crb = _run_both(rb, texts)
-    assert off.equals(on)
-    folded_sshd = [u for u, v in crb._dispatch_memo_cache.items()
-                   if u.startswith("sshd") and v[1] is not None]
-    assert not folded_sshd
+    texts = ["sshd[1]: accepted root", "sshd[2]: failed eve",
+             "sshd[3]: closed"] + _pad_rows()
+    _assert_matches_walker(rb, texts)
 
 
 def test_wildcard_rule_disables_fold_globally():
+    # a rule without a leading literal is a candidate for every row
     rb = ("version=2\n"
           "rule=w:%all:rest%\n" + _pad_rules() + "\n")
-    off, on, crb = _run_both(rb, _pad_rows() + ["anything at all"])
-    assert off.equals(on)
-    assert all(v[1] is None for v in crb._dispatch_memo_cache.values())
+    _assert_matches_walker(rb, _pad_rows() + ["anything at all", ""])
 
 
 def test_walker_only_sole_rule_not_folded():
-    # regex-inexpressible rule (repeat with permitMismatch stays
-    # walker-only): sole-by-prefix but pattern is None -> no fold entry
-    rb = ("version=2\n"
-          "rule=r:wonly %n{\"parser\":{\"name\":\"x\",\"type\":\"number\"},"
-          "\"while\":{\"type\":\"literal\",\"text\":\":\"},"
-          "\"option.permitMismatchInParser\":true}:repeat%\n"
-          + _pad_rules() + "\n")
-    off, on, _ = _run_both(rb, ["wonly 1:2:3"] + _pad_rows())
-    assert off.equals(on)
+    rb = f"version=2\nrule=r:wonly {_REPEAT}\n" + _pad_rules() + "\n"
+    _assert_matches_walker(rb, ["wonly 1:2:3", "wonly x", "wonl"] + _pad_rows())
 
 
 def test_complex_fields_and_annotations_fold_identically():
@@ -94,29 +115,55 @@ def test_complex_fields_and_annotations_fold_identically():
           "annotate=t:+sev=\"hi\"\n" + _pad_rules() + "\n")
     texts = ["cplx[42] 10.0.0.1", "cplx[999] 10.0.0.1",
              "cplx[7] 10.0.0.999"] + _pad_rows()
-    off, on, _ = _run_both(rb, texts)
-    assert off.equals(on)
+    _assert_matches_walker(rb, texts)
 
 
 def test_decorated_output_fold_identically():
     rb = "version=2\n" + _pad_rules() + "\n"
-    off, on, _ = _run_both(rb, _pad_rows() + ["junk"],
+    _assert_matches_walker(rb, _pad_rows() + ["junk"],
                            add_originalmsg=True, add_rule_location=True,
                            add_rule_mockup=True)
-    assert off.equals(on)
 
 
 def test_prefilter_longer_than_dispatch_window():
-    # rule literal extends past _DISPATCH_MAX_DEPTH: the bisect arm must
-    # count it compatible; a second long-literal sibling kills the fold
+    # rule literals that share the whole dispatch window and differ after it
     long_a = "L" * (M._DISPATCH_MAX_DEPTH + 4) + "A"
     long_b = "L" * (M._DISPATCH_MAX_DEPTH + 4) + "B"
     rb = ("version=2\n"
           f"rule=la:{long_a} %v:number%\n"
           f"rule=lb:{long_b} %v:number%\n" + _pad_rules() + "\n")
-    texts = [f"{long_a} 1", f"{long_b} 2"] + _pad_rows()
-    off, on, crb = _run_both(rb, texts)
-    assert off.equals(on)
-    folded_long = [u for u, v in crb._dispatch_memo_cache.items()
-                   if u.startswith("L") and v[1] is not None]
-    assert not folded_long  # shared window prefix -> ambiguous -> no fold
+    texts = [f"{long_a} 1", f"{long_b} 2", f"{long_a} x",
+             "L" * (M._DISPATCH_MAX_DEPTH + 2)] + _pad_rows()
+    _assert_matches_walker(rb, texts)
+
+
+def test_few_distinct_prefixes_batch():
+    # under 64 distinct dispatch prefixes, rows routed to several cohorts
+    # (a literal rule plus rules every row can reach) and to none;
+    # "sshd[1]: closed" is matched by a rule without a leading literal
+    rb = ("version=2\n"
+          "rule=a:sshd[%pid:number%]: accepted %u:word%\n"
+          f"rule=w:wonly {_REPEAT}\n"
+          "rule=kv:%f:name-value-list%\n"
+          "rule=wc:%w:word% closed\n"
+          "rule=b:sshd[%pid:number%]: failed %u:word%\n")
+    texts = ["sshd[1]: accepted root", "sshd[1]: failed eve", "a=1 b=2",
+             "wonly 1:2", "sshd[1]: closed", "", "sshd[1]: accepted root"] * 3
+    _assert_matches_walker(rb, texts)
+
+
+def test_walker_only_literal_past_dispatch_window():
+    # the walker-only rule's literal runs past the 16-char window: rows that
+    # share the window but not the literal reach it through dispatch and
+    # must still fall through to the regex rule and the fallback
+    lit = "walkeronly-long-literal-prefix"
+    rb = ("version=2\n"
+          f"rule=w:{lit} {_REPEAT}\n"
+          "rule=r:walkeronly-long-other %v:number%\n")
+    texts = [f"{lit} 1:2:3", f"{lit} x", "walkeronly-long-other 7",
+             "walkeronly-long-other x", "walkeronly-long-literal-pre",
+             "walkeronly-lo"]
+    crb = compile_rulebase(Rulebase.from_string(rb))
+    assert crb.cohorts[0].pattern is None  # the rule really is walker-only
+    out = _assert_matches_walker(rb, texts)
+    assert out["unparsed_data"].isna().tolist() == [True, False, True, False, False, False]

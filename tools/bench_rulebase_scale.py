@@ -12,6 +12,7 @@ Run: python tools/bench_rulebase_scale.py [sizes...]
 from __future__ import annotations
 
 import os
+import pickle
 import sys
 import time
 
@@ -52,6 +53,7 @@ def main():
     sizes = [int(s) for s in args] or [8, 128, 512, 2048]
     for n in sizes:
         crb = compile_rulebase(Rulebase.from_string(build_rulebase(n)))
+        blob = pickle.dumps(crb)
         texts = build_workload(n, all_match=all_match)
         # warm with one FULL batch: an executor processes hundreds of
         # batches per task, so steady state (dispatch/plan caches hot,
@@ -69,29 +71,20 @@ def main():
         # replay exactly the prefixes the warm-up populated, i.e. the
         # memo's 100%-hit best case): report the workload's distinct-
         # prefix count, the dispatch-memo population, and a COLD column
-        # where every rep first drops the cross-batch memos — the gap
-        # between the two columns IS the memo's contribution, and the
-        # cold column is the bound for streams whose distinct-prefix set
-        # exceeds the 65536-entry memo cap or churns across batches.
+        # where every rep starts from a freshly unpickled rulebase — the
+        # gap between the two columns IS the lazy caches' contribution, and
+        # the cold column is the bound for streams whose distinct-prefix
+        # set exceeds the 65536-entry memo cap or churns across batches.
         memo_entries = len(getattr(crb, "_dispatch_memo_cache", {}) or {})
         distinct_prefixes = len(
             {t.split("[", 1)[0] for t in texts})  # prog{i} leading literal
         cold = None
         for _ in range(3):
-            # drop ALL cross-batch memo state: the dispatch memo, the
-            # fallback memo, the fold index, and each rule's prepared
-            # fold entry (the dispatch TRIE itself is deliberately kept —
-            # it is built once per compile, not per stream).  Before
-            # round 6 the fold state survived, so the cold column partly
-            # amortized round-5 fold work and over-credited the memo.
-            for attr in ("_dispatch_memo_cache", "_fb_memo", "_fold_idx"):
-                if hasattr(crb, attr):
-                    delattr(crb, attr)
-            for cr in crb.rules:
-                if hasattr(cr, "_fold_ent"):
-                    delattr(cr, "_fold_ent")
+            # a fresh unpickled copy of the compiled rulebase, as each
+            # Spark task gets: no memo, trie or per-rule cache survives
+            fresh = pickle.loads(blob)
             t0 = time.perf_counter()
-            match_batch(crb, texts)
+            match_batch(fresh, texts)
             d = time.perf_counter() - t0
             cold = d if cold is None else min(cold, d)
         print(
