@@ -219,6 +219,7 @@ def _main_spark(args, crb, csv_fields) -> int:
     from pyspark.sql import functions as F
 
     from liblognorm_spark.encoders import encode_df
+    from liblognorm_spark.pipeline.pipeline import route_stage
     from liblognorm_spark.runtime.matcher import normalize_df
     from liblognorm_spark.session import get_spark
 
@@ -239,13 +240,7 @@ def _main_spark(args, crb, csv_fields) -> int:
     if args.out_dir:
         # real-use path: encode + fan out to a partitioned sink tree on the
         # executors — nothing is funneled through the driver
-        routed = out.withColumn(
-            "sink",
-            F.when(F.col("unparsed_data").isNotNull(), F.lit("unparsed")).otherwise(
-                F.coalesce(F.element_at(F.col("tags"), 1), F.lit("untagged"))
-            ),
-        )
-        routed = encode_df(routed, args.encoder, csv_fields)
+        routed = encode_df(route_stage(out), args.encoder, csv_fields)
         (
             routed.select("sink", "encoded")
             .write.mode("overwrite")

@@ -1,8 +1,12 @@
 """Rulebase -> compiled vectorized matcher.
 
-Compiles each rule's linearized parser sequence into ONE anchored Python
-regex with named groups (the fast path executed over pandas string batches),
-plus metadata to turn captures into the output JSON event.  Design notes:
+Rules are ordered like the reference PDAG, and each maximal run of
+regex-expressible rules is fused into ONE trie-factored anchored Python
+regex (a :class:`MatchCohort`) with named groups and per-rule marker
+groups — the fast path executed over pandas string batches.  The cohort
+pattern is the only compiled form of a rule: :func:`compile_rule` only
+decides whether a regex can express the rule, and a rule that cannot is
+matched by the exact walker.  Design notes:
 
 * Motif fragments use possessive quantifiers / atomic groups so the regex
   cannot backtrack *inside* a motif — the reference's parsers are greedy
@@ -18,7 +22,7 @@ plus metadata to turn captures into the output JSON event.  Design notes:
 * Rule order mirrors PDAG child ordering: a trie over parser-config tokens
   ordered by combined priority (src/pdag.c:378-398) with insertion order
   as tie-break; DFS over the trie yields the global first-match-wins rule
-  order.
+  order.  The same trie builder factors each cohort's pattern.
 """
 
 from __future__ import annotations
@@ -31,7 +35,7 @@ from typing import Callable, Optional
 from liblognorm_spark.compiler import motifs as M
 from liblognorm_spark.compiler.motifs import Reject
 from liblognorm_spark.rulebase.loader import Alt, PNode, Rule, Rulebase
-from liblognorm_spark.runtime.walker import WalkState, attach, walk_seq
+from liblognorm_spark.runtime.walker import WalkState, _lit_prefix, _merge_key, attach
 
 RE_SP = r"[ \t\n\v\f\r]"
 OCTET = r"(?:[01][0-9]{2}|2[0-4][0-9]|25[0-5]|[0-9]{1,2})(?![0-9])"
@@ -46,6 +50,10 @@ def _frag_literal(p):
 
 
 def _neg_class(chars: str) -> str:
+    """Any char not in `chars`; with no chars, any char at all (``[^]`` is
+    not a valid Python class)."""
+    if not chars:
+        return r"[\s\S]"
     inner = "".join(re.escape(c) for c in chars)
     return f"[^{inner}]"
 
@@ -176,6 +184,18 @@ class FieldSpec:
     node: PNode
     sub: Optional[list] = None  # sub-FieldSpecs for custom-type objects
 
+    @property
+    def simple(self) -> bool:
+        """A plain-string capture: extract() returns the group unchanged."""
+        node = self.node
+        return (
+            self.sub is None
+            and not _needs_walker(node.ptype, node.params)
+            and "format" not in node.params
+            and "maxval" not in node.params
+            and node.ptype != "v2-iptables"
+        )
+
     def extract(self, m: re.Match, text: str, types: dict):
         """Captured text -> JSON value (may raise Reject)."""
         raw = m.group(self.gname)
@@ -242,17 +262,15 @@ def _flat_literal(seq):
 
 
 def _head_merge_key(seq):
-    """PDAG merge identity of a seq's first item (walker._merge_key twin) —
-    used to detect shared-prefix type alternatives the regex path cannot
-    emulate."""
+    """PDAG merge identity of a seq's first item (walker._merge_key, plus
+    the empty-seq and Alt cases) — used to detect shared-prefix type
+    alternatives the regex path cannot emulate."""
     if not seq:
         return ("empty",)
     it = seq[0]
     if isinstance(it, Alt):
         return ("alt", id(it))
-    if it.ptype == "literal" and it.name is None:
-        return ("lit", it.params.get("text", "")[:1], None)
-    return (it.ptype, it.name, repr(sorted(it.params.items(), key=lambda kv: kv[0])))
+    return _merge_key(it)
 
 
 def _item_fragment(item, ctx: _Ctx, specs: list, capture: bool) -> str:
@@ -340,10 +358,8 @@ def _seq_fragment(seq, ctx: _Ctx, specs: list, capture: bool) -> str:
 @dataclass
 class CompiledRule:
     rule: Rule
-    pattern: Optional[re.Pattern]  # None -> walker-only rule
-    specs: list  # list[FieldSpec]
+    regexable: bool  # False -> walker-only rule
     prefilter: str  # unnamed leading literal: keys the matcher's dispatch trie
-    frag: str = ""  # the raw fragment (for master-alternation assembly)
     order: int = 0
     # constant per-rule event fields: event.tags + tag annotations
     extra_fields: dict = field(default_factory=dict)
@@ -365,63 +381,27 @@ class CompiledRule:
         return self.rule.tags
 
 
-def _literal_prefix(seq) -> str:
-    """The unnamed leading literal every match must start with ("" if the
-    rule starts with a motif, a named literal or an alternative)."""
-    if seq and _is_plain_lit(seq[0]):
-        return seq[0].params["text"]
-    return ""
-
-
-def compile_rule(rule: Rule, types: dict, ctx: _Ctx | None = None) -> CompiledRule:
-    """`ctx` may be shared across rules so group names stay unique inside a
-    master alternation."""
-    if ctx is None:
-        ctx = _Ctx(types)
-    ctx.regexable = True
-    specs: list = []
-    frag = _seq_fragment(rule.seq, ctx, specs, capture=True)
-    pattern = None
-    if ctx.regexable:
-        try:
-            pattern = re.compile(frag)
-        except re.error:
-            pattern = None
-    return CompiledRule(
-        rule=rule,
-        pattern=pattern,
-        specs=specs if pattern is not None else [],
-        prefilter=_literal_prefix(rule.seq),
-        frag=frag if pattern is not None else "",
-    )
+def compile_rule(rule: Rule, types: dict) -> CompiledRule:
+    """Decide whether one regex can express the rule (its fragment is
+    built and dropped); :meth:`MatchCohort.build` compiles it."""
+    ctx = _Ctx(types)
+    _seq_fragment(rule.seq, ctx, [], capture=False)
+    return CompiledRule(rule=rule, regexable=ctx.regexable, prefilter=_lit_prefix(rule))
 
 
 @dataclass
 class ExtractPlan:
-    """Per-rule extraction metadata for a trie cohort match."""
+    """Per-rule extraction metadata for a trie cohort match, in the shape
+    the matcher hot loop reads: attribute chains flattened, captures
+    reversed once (leftmost attaches last), simple captures resolved to
+    INTEGER group indices (m.group(int) skips the name lookup)."""
 
-    cr: "CompiledRule"
-    specs: list  # FieldSpecs along the rule's trie path (shared groups)
-    simple: list  # [(gname, name)] fast-path captures
+    rule: Rule
+    rule_id: int
+    extra_fields: dict
     has_complex: bool
-
-    @classmethod
-    def build(cls, cr, specs):
-        simple = []
-        has_complex = False
-        for fs in specs:
-            node = fs.node
-            if (
-                fs.sub is None
-                and not _needs_walker(node.ptype, node.params)
-                and "format" not in node.params
-                and "maxval" not in node.params
-                and node.ptype != "v2-iptables"
-            ):
-                simple.append((fs.gname, fs.name))
-            else:
-                has_complex = True
-        return cls(cr=cr, specs=specs, simple=simple, has_complex=has_complex)
+    specs_rev: tuple  # FieldSpecs along the rule's trie path (shared groups)
+    simple_rev: tuple  # (group index, name) fast-path captures
 
 
 class _TrieNode:
@@ -432,6 +412,27 @@ class _TrieNode:
         self.children: dict = {}
         self.ins = ins
         self.terminals: list = []
+
+    def ordered_children(self):
+        """Combined-priority order, insertion order as tie-break
+        (src/pdag.c:378-398)."""
+        return sorted(self.children.values(), key=lambda c: (c.item.prio, c.ins))
+
+
+def _build_trie(entries) -> _TrieNode:
+    """Shared-prefix trie over `(seq, payload)` entries; each payload joins
+    its seq's end node's terminals in entry order."""
+    root = _TrieNode()
+    for seq, payload in entries:
+        node = root
+        for item in _expand_items(seq):
+            k = _edge_key(item)
+            child = node.children.get(k)
+            if child is None:
+                child = node.children[k] = _TrieNode(item=item, ins=len(node.children))
+            node = child
+        node.terminals.append(payload)
+    return root
 
 
 def _expand_items(seq):
@@ -475,38 +476,18 @@ class MatchCohort:
     pattern: re.Pattern = None  # type: ignore[assignment]
     by_marker: dict = None  # type: ignore[assignment]  # group index -> ExtractPlan
 
-    def build(self, ctx: "_Ctx" = None, types: dict | None = None):
-        if ctx is None:
-            ctx = _Ctx(types or {})
-        # the ctx is shared across the whole rulebase compile: a preceding
-        # WALKER-ONLY rule leaves regexable=False, and _item_fragment then
-        # returns "" for custom-type nodes — silently DROPPING them from
-        # the master pattern (fuzz-found: a discard-named user type
-        # vanished, matching inputs the rule must reject).  Every rule in
-        # this cohort already compiled regexable, so reset and re-assert.
-        ctx.regexable = True
-        root = _TrieNode()
-        for cr in self.rules:
-            node = root
-            for item in _expand_items(cr.rule.seq):
-                k = _edge_key(item)
-                child = node.children.get(k)
-                if child is None:
-                    child = _TrieNode(item=item, ins=len(node.children))
-                    node.children[k] = child
-                node = child
-            node.terminals.append(cr)
-
-        plans: dict[int, ExtractPlan] = {}  # marker name order -> plan
+    def build(self, types: dict):
+        ctx = _Ctx(types)  # group names need only be unique in this pattern
+        ends: list = []  # (CompiledRule, FieldSpecs along its trie path)
         path_specs: list = []
 
         def emit(node: _TrieNode) -> str:
             parts = []
             if node.terminals:
                 cr = node.terminals[0]  # duplicates coalesce: first wins
-                plans[cr.order] = ExtractPlan.build(cr, list(path_specs))
+                ends.append((cr, list(path_specs)))
                 parts.append(f"(?P<R{cr.order}>)")
-            for child in sorted(node.children.values(), key=lambda c: (_edge_key(c.item)[0], c.ins)):
+            for child in node.ordered_children():
                 # compact single-child unnamed-literal chains (the PDAG's
                 # literal path compaction, src/pdag.c:345-375)
                 lits = []
@@ -537,7 +518,7 @@ class MatchCohort:
                 return parts[0]
             return "(?:" + "|".join(parts) + ")"
 
-        pattern_src = emit(root)
+        pattern_src = emit(_build_trie((cr.rule.seq, cr) for cr in self.rules))
         if not ctx.regexable:
             raise AssertionError(
                 "cohort fragment rebuild turned non-regexable for rules "
@@ -545,22 +526,15 @@ class MatchCohort:
                 "their per-rule compilation"
             )
         self.pattern = re.compile(pattern_src)
-        self.by_marker = {
-            self.pattern.groupindex[f"R{order}"]: plan for order, plan in plans.items()
-        }
-        # precomputed per-plan extraction tuples for the matcher hot loop:
-        # reversed once here (not per row), and simple captures resolved to
-        # INTEGER group indices (m.group(int) skips the name lookup)
         gidx = self.pattern.groupindex
-        for plan in plans.values():
-            plan.simple_rev = tuple((gidx[g], nm) for g, nm in reversed(plan.simple))
-            plan.specs_rev = tuple(reversed(plan.specs))
-            # flatten the per-row property/attribute chains out of the
-            # matcher hot loop (cr.rule_id is a property; cr.rule.* is a
-            # 2-hop chain — both measurable at 20k+ matched rows per batch)
-            plan.rule_id = plan.cr.rule_id
-            plan.extra_fields = plan.cr.extra_fields
-            plan.rule = plan.cr.rule
+        self.by_marker = {}
+        for cr, specs in ends:
+            simple = [fs for fs in specs if fs.simple]
+            self.by_marker[gidx[f"R{cr.order}"]] = ExtractPlan(
+                rule=cr.rule, rule_id=cr.rule_id, extra_fields=cr.extra_fields,
+                has_complex=len(simple) < len(specs), specs_rev=tuple(reversed(specs)),
+                simple_rev=tuple((gidx[fs.gname], fs.name) for fs in reversed(simple)),
+            )
         return self
 
     def plan_for(self, m: re.Match):
@@ -585,17 +559,6 @@ def _node_ident(n: PNode) -> str:
 def order_rules(rules: list[Rule]) -> list[int]:
     """Return rule_ids in PDAG first-match order: DFS over the shared-prefix
     trie with children sorted by (combined priority, insertion order)."""
-    root: dict = {"children": {}, "rules": []}
-    for idx, rule in enumerate(rules):
-        node = root
-        # the same tokens MatchCohort.build shares prefixes on: literals
-        # split per char (src/samp.c:320-325: one PDAG node per char)
-        for item in _expand_items(rule.seq):
-            key = _edge_key(item)
-            if key not in node["children"]:
-                node["children"][key] = {"children": {}, "rules": [], "ins": len(node["children"])}
-            node = node["children"][key]
-        node["rules"].append(idx)
     # Preorder: a terminal rule at a node is emitted before longer rules
     # through that node.  The reference accepts a terminal only at EOS
     # (src/pdag.c:1608-1612) and that acceptance overrides any child match
@@ -603,14 +566,12 @@ def order_rules(rules: list[Rule]) -> list[int]:
     # fullmatch-anchored regexes make the two mutually exclusive otherwise.
     order: list[int] = []
 
-    def dfs(node):
-        order.extend(node["rules"])
-        for _key, child in sorted(
-            node["children"].items(), key=lambda kv: (kv[0][0], kv[1]["ins"])
-        ):
+    def dfs(node: _TrieNode):
+        order.extend(node.terminals)
+        for child in node.ordered_children():
             dfs(child)
 
-    dfs(root)
+    dfs(_build_trie((rule.seq, idx) for idx, rule in enumerate(rules)))
     return order
 
 
@@ -631,9 +592,8 @@ class CompiledRulebase:
 def compile_rulebase(rb: Rulebase) -> CompiledRulebase:
     order = order_rules(rb.rules)
     compiled = []
-    ctx = _Ctx(rb.types)
     for pos, idx in enumerate(order):
-        cr = compile_rule(rb.rules[idx], rb.types, ctx)
+        cr = compile_rule(rb.rules[idx], rb.types)
         cr.order = pos
         cr.finish(rb.annotations)
         compiled.append(cr)
@@ -650,11 +610,11 @@ def compile_rulebase(rb: Rulebase) -> CompiledRulebase:
         nonlocal run
         for i in range(0, len(run), MAX_COHORT_RULES):
             chunk = run[i : i + MAX_COHORT_RULES]
-            cohorts.append(MatchCohort(rules=chunk).build(ctx, rb.types))
+            cohorts.append(MatchCohort(rules=chunk).build(rb.types))
         run = []
 
     for cr in compiled:
-        if cr.pattern is not None:
+        if cr.regexable:
             run.append(cr)
         else:
             flush_run()

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from liblognorm_spark.compiler.compiler import CompiledRulebase, compile_rulebase
 from liblognorm_spark.pipeline.fixture_rulebase import routing_rulebase
+from liblognorm_spark.pipeline.pipeline import route_stage
 from liblognorm_spark.rulebase.loader import Rulebase
 from liblognorm_spark.runtime.matcher import normalize_df
 
@@ -35,12 +36,7 @@ def windowed_sink_counts(parsed_stream, window: str = "5 minutes", watermark: st
     """Per-sink tumbling-window counts with a watermark for late rows."""
     from pyspark.sql import functions as F
 
-    routed = parsed_stream.withColumn(
-        "sink",
-        F.when(F.col("unparsed_data").isNotNull(), F.lit("unparsed")).otherwise(
-            F.coalesce(F.element_at(F.col("tags"), 1), F.lit("untagged"))
-        ),
-    )
+    routed = route_stage(parsed_stream)
     return (
         routed.withWatermark("warc_ts", watermark)
         .groupBy(F.window("warc_ts", window).alias("w"), "sink")
@@ -109,12 +105,7 @@ def start_fanout_query(parsed_stream, out_dir: str, checkpoint_dir: str):
     from pyspark.sql import functions as F
 
     def write_batch(df, epoch_id: int):
-        routed = df.withColumn(
-            "sink",
-            F.when(F.col("unparsed_data").isNotNull(), F.lit("unparsed")).otherwise(
-                F.coalesce(F.element_at(F.col("tags"), 1), F.lit("untagged"))
-            ),
-        ).withColumn("epoch", F.lit(epoch_id))
+        routed = route_stage(df).withColumn("epoch", F.lit(epoch_id))
         (
             routed.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")

@@ -10,14 +10,18 @@ window, complex (validated) fields with Reject fallbacks, annotations,
 near-miss rows and decoration options.  The test names are those of the
 former sole-rule fold's tests, whose fixtures they keep as inputs.
 Each batch is matched twice on one compiled rulebase, so the second pass
-runs on warm dispatch and unmatched-row memos.
+runs on warm dispatch and unmatched-row memos.  The last test pins the
+compiled form the matcher ships: cohort patterns and nothing else.
 """
 
+import gc
 import json
+import re
+import types
 
 import pandas as pd
 
-from liblognorm_spark.compiler.compiler import compile_rulebase
+from liblognorm_spark.compiler.compiler import MatchCohort, compile_rulebase
 from liblognorm_spark.rulebase.loader import Rulebase
 from liblognorm_spark.runtime import matcher as M
 from liblognorm_spark.runtime.walker import normalize_message
@@ -164,6 +168,46 @@ def test_walker_only_literal_past_dispatch_window():
              "walkeronly-long-other x", "walkeronly-long-literal-pre",
              "walkeronly-lo"]
     crb = compile_rulebase(Rulebase.from_string(rb))
-    assert crb.cohorts[0].pattern is None  # the rule really is walker-only
+    assert not isinstance(crb.cohorts[0], MatchCohort)  # the rule really is walker-only
     out = _assert_matches_walker(rb, texts)
     assert out["unparsed_data"].isna().tolist() == [True, False, True, False, False, False]
+
+
+def test_char_sep_without_separator_in_cohort():
+    # char-sep with no separator consumes to the end of the string
+    # (parse_char_sep); its regex twin does the same, so the rule is
+    # matched by its cohort pattern rather than by the walker
+    rb = ("version=2\n"
+          "rule=cs:csep %x:char-sep%\n"
+          "rule=ct:csept %x:char-sep% tail\n" + _pad_rules() + "\n")
+    crb = compile_rulebase(Rulebase.from_string(rb))
+    assert all(isinstance(c, MatchCohort) for c in crb.cohorts)
+    texts = ["csep abc, def;x", "csep ", "csep", "csept x tail",
+             "csept  tail", "csepx"] + _pad_rows()
+    _assert_matches_walker(rb, texts)
+
+
+def _reachable_patterns(root):
+    """re.Pattern objects reachable from `root` through instances and
+    containers (classes, modules and functions are not followed)."""
+    seen, found, stack = set(), [], [root]
+    skip = (type, types.ModuleType, types.FunctionType, str, bytes, int, float)
+    while stack:
+        obj = stack.pop()
+        if id(obj) in seen or isinstance(obj, skip):
+            continue
+        seen.add(id(obj))
+        if isinstance(obj, re.Pattern):
+            found.append(obj)
+        else:
+            stack.extend(gc.get_referents(obj))
+    return found
+
+
+def test_cohort_patterns_are_the_only_compiled_regexes():
+    from tools.bench_rulebase_scale import build_rulebase
+
+    crb = compile_rulebase(Rulebase.from_string(build_rulebase(256)))
+    cohort_patterns = [c.pattern for c in crb.cohorts if isinstance(c, MatchCohort)]
+    assert len(cohort_patterns) == 4  # 256 regexable rules, 64 per cohort
+    assert sorted(map(id, _reachable_patterns(crb))) == sorted(map(id, cohort_patterns))

@@ -211,9 +211,9 @@ def test_float_fraction_possessive():
 
 
 def test_cohort_keeps_custom_fragment_after_walker_only_rule():
-    """A walker-only rule leaves the shared compile ctx non-regexable; the
-    cohort master-pattern rebuild must still emit custom-type fragments
-    (fuzz-found: a discard-named user type vanished from the master, so
+    """A walker-only rule ahead of a cohort must not drop custom-type
+    fragments from the cohort pattern (fuzz-found while one compile ctx
+    was shared across rules: a discard-named user type vanished, so
     'a pid[47119 b' — missing the ']' — falsely matched on the fast
     path, and genuinely matching rows fell to the slow fallback)."""
     import pandas as pd

@@ -4,7 +4,9 @@ Builds synthetic rulebases of N rules (distinct program-name leading
 literals, the shape of real syslog rulebases), a near-miss-heavy workload
 (80% matching rows, 20% rows that share a rule's literal prefix but die in
 the motif tail — the worst case: every cohort regex runs AND the walker
-fallback fires), and prints rows/s per rulebase size.
+fallback fires), and prints, per rulebase size, the compile seconds, the
+pickled size of the compiled rulebase (what each Spark task unpickles) and
+rows/s.
 
 Run: python tools/bench_rulebase_scale.py [sizes...]
 """
@@ -52,7 +54,10 @@ def main():
     all_match = "--all-match" in sys.argv  # pure matched-row workload
     sizes = [int(s) for s in args] or [8, 128, 512, 2048]
     for n in sizes:
-        crb = compile_rulebase(Rulebase.from_string(build_rulebase(n)))
+        rb = Rulebase.from_string(build_rulebase(n))
+        t0 = time.perf_counter()
+        crb = compile_rulebase(rb)
+        compile_s = time.perf_counter() - t0
         blob = pickle.dumps(crb)
         texts = build_workload(n, all_match=all_match)
         # warm with one FULL batch: an executor processes hundreds of
@@ -88,7 +93,8 @@ def main():
             d = time.perf_counter() - t0
             cold = d if cold is None else min(cold, d)
         print(
-            f"rules={n:5d} rows={len(texts)} wall={dt:6.2f}s "
+            f"rules={n:5d} compile_s={compile_s:5.2f} pickled_bytes={len(blob)} "
+            f"rows={len(texts)} wall={dt:6.2f}s "
             f"rows/s={len(texts) / dt:9.0f} cold_rows/s={len(texts) / cold:9.0f} "
             f"distinct_prefixes={distinct_prefixes} memo_entries={memo_entries} "
             f"unparsed={unparsed}"
