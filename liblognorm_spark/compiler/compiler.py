@@ -418,6 +418,23 @@ class _TrieNode:
         (src/pdag.c:378-398)."""
         return sorted(self.children.values(), key=lambda c: (c.item.prio, c.ins))
 
+    def literal_chain(self):
+        """The PDAG's literal path compaction (src/pdag.c:345-375): from
+        this node, follow single-child unnamed-literal chars that end no
+        rule.  Returns the chars passed and the node the chain stops at
+        (whose own item is not among the chars)."""
+        chars = []
+        node = self
+        while (
+            _is_plain_lit(node.item)
+            and not node.terminals
+            and len(node.children) == 1
+            and _is_plain_lit(next(iter(node.children.values())).item)
+        ):
+            chars.append(node.item.params["text"])
+            node = next(iter(node.children.values()))
+        return chars, node
+
 
 def _build_trie(entries) -> _TrieNode:
     """Shared-prefix trie over `(seq, payload)` entries; each payload joins
@@ -454,6 +471,10 @@ def _edge_key(item):
             sort_keys=True,
         )
         return (item.prio, "alt:" + ident)
+    if _is_plain_lit(item) and len(item.params["text"]) == 1:
+        # _expand_items' per-char literal: the char is its identity (no
+        # other key is one char long), without a json dump per char
+        return (item.prio, item.params["text"])
     return (item.prio, _node_ident(item))
 
 
@@ -488,18 +509,7 @@ class MatchCohort:
                 ends.append((cr, list(path_specs)))
                 parts.append(f"(?P<R{cr.order}>)")
             for child in node.ordered_children():
-                # compact single-child unnamed-literal chains (the PDAG's
-                # literal path compaction, src/pdag.c:345-375)
-                lits = []
-                cur = child
-                while (
-                    _is_plain_lit(cur.item)
-                    and not cur.terminals
-                    and len(cur.children) == 1
-                    and _is_plain_lit(next(iter(cur.children.values())).item)
-                ):
-                    lits.append(cur.item.params["text"])
-                    cur = next(iter(cur.children.values()))
+                lits, cur = child.literal_chain()
                 if _is_plain_lit(cur.item):
                     lits.append(cur.item.params["text"])
                     frag = re.escape("".join(lits))

@@ -3,7 +3,7 @@
 All stages after the vectorized match are stock DataFrame operations so
 Catalyst handles pushdown/pruning/broadcast/AQE:
 
-* parse    — ``normalize_df`` (a struct-returning pandas_udf over Arrow batches)
+* parse    — ``normalize_df`` (a struct-returning Arrow UDF over Arrow batches)
 * enrich   — broadcast hash joins against small lookup tables
   (generalization of the reference's tag-driven constant annotation,
   src/annot.c:214-239)

@@ -4,7 +4,7 @@ Execution model (the Spark-first replacement for the reference's per-message
 ``ln_normalize`` loop, src/lognormalizer.c:213-267):
 
 * The rulebase is compiled once on the driver (:func:`compile_rulebase`)
-  and shipped to executors inside the ``pandas_udf`` closure — the
+  and shipped to executors inside the Arrow UDF's closure — the
   broadcast-once / read-many design of the reference's immutable PDAG
   (doc/pdag_implementation_model.rst:117-123).
 * Every row takes one of four paths, chosen per Arrow batch:
@@ -27,16 +27,18 @@ Execution model (the Spark-first replacement for the reference's per-message
     is reused from a bounded cross-batch memo.
 
 No per-row Python crosses the Spark API surface: the entry point is a
-struct-returning scalar pandas_udf (``normalize_df``) over Arrow record
-batches.
+struct-returning scalar Arrow UDF (``normalize_df``) over Arrow record
+batches, which reads and returns Arrow arrays without a pandas round-trip.
 """
 
 from __future__ import annotations
 
 import json as _json
+import re
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from liblognorm_spark.compiler.compiler import (
     CompiledRulebase,
@@ -241,8 +243,30 @@ def match_batch(crb: CompiledRulebase, texts: pd.Series,
     (src/pdag.c:1672-1677); `add_rule_mockup` mirrors LN_CTXOPT_ADD_RULE
     (src/pdag.c:1246-1251: metadata.rule.mockup, the matched rule's
     template)."""
-    n = len(texts)
-    tvals = texts.to_numpy(dtype=object)
+    rule_id, fields_json, unparsed, originalmsg, parsed_to = _match_rows(
+        crb, texts.to_numpy(dtype=object), texts.notna().to_numpy(),
+        add_rule_location, add_originalmsg, add_rule_mockup, add_exec_path)
+    return pd.DataFrame(
+        {
+            "rule_id": pd.array(rule_id, dtype="int32"),
+            "fields_json": fields_json,
+            "unparsed_data": unparsed,
+            "originalmsg": originalmsg,
+            "parsed_to": pd.array(parsed_to, dtype="int32"),
+        }
+    )
+
+
+def _match_rows(crb: CompiledRulebase, tvals: np.ndarray, notna: np.ndarray,
+                add_rule_location: bool = False,
+                add_originalmsg: bool = False,
+                add_rule_mockup: bool = False,
+                add_exec_path: bool = False) -> tuple:
+    """The matcher core shared by :func:`match_batch` and the Arrow UDF:
+    `tvals` is an object array of texts and `notna` its validity mask.
+    Returns the five column lists rule_id, fields_json, unparsed_data,
+    originalmsg and parsed_to."""
+    n = len(tvals)
     # plain lists: scalar assignment is ~3x cheaper than numpy setitem
     rule_id: list = [-1] * n
     fields_json: list = [None] * n
@@ -250,7 +274,6 @@ def match_batch(crb: CompiledRulebase, texts: pd.Series,
     originalmsg: list = [None] * n
     parsed_to: list = [0] * n
 
-    notna = texts.notna().to_numpy()
     remaining = notna.copy()
     need_walker = np.zeros(n, dtype=bool)
     types = crb.types
@@ -482,16 +505,7 @@ def match_batch(crb: CompiledRulebase, texts: pd.Series,
             originalmsg[pos] = om
     if not decorate_needed:
         crb._fb_memo_bytes = fb_bytes
-
-    return pd.DataFrame(
-        {
-            "rule_id": pd.array(rule_id, dtype="int32"),
-            "fields_json": fields_json,
-            "unparsed_data": unparsed,
-            "originalmsg": originalmsg,
-            "parsed_to": pd.array(parsed_to, dtype="int32"),
-        }
-    )
+    return rule_id, fields_json, unparsed, originalmsg, parsed_to
 
 
 def normalize_strings(rb: Rulebase | CompiledRulebase, lines: list[str]) -> list[dict]:
@@ -502,67 +516,93 @@ def normalize_strings(rb: Rulebase | CompiledRulebase, lines: list[str]) -> list
     return [_json.loads(s) if s else {} for s in df["fields_json"]]
 
 
+_SQL_UNSAFE = re.compile(r"[^A-Za-z0-9 _\-.,:/]")
+
+
+def _sql_str(s: str) -> str:
+    """`s` as a Spark SQL string literal.  Every char outside
+    ``[A-Za-z0-9 _-.,:/]`` is written as ``\\uXXXX`` UTF-16 units, so no
+    quote, backslash, control char or ``${...}`` variable reference (Spark
+    substitutes those in SQL text) reaches the parser raw."""
+    return "'" + _SQL_UNSAFE.sub(_sql_escape, s) + "'"
+
+
+def _sql_escape(m: re.Match) -> str:
+    b = m.group().encode("utf-16-be", "surrogatepass")
+    return "".join(f"\\u{b[i]:02x}{b[i + 1]:02x}" for i in range(0, len(b), 2))
+
+
+def _rule_lookup(crb: CompiledRulebase, values) -> str:
+    """SQL for the per-rule constant `values` (SQL literals, one per rule
+    in crb.rules) of each row's matched rule; NULL for unmatched rows."""
+    pairs = ", ".join(f"{cr.rule_id}, {v}" for cr, v in zip(crb.rules, values))
+    return f"element_at(map({pairs}), _m.rule_id)"
+
+
 def normalize_df(df, rb: Rulebase | CompiledRulebase, text_col: str = "text"):
     """Spark entry point: adds match-result columns to `df`.
 
-    A struct-returning scalar pandas_udf over ONLY the text column: the
+    A struct-returning scalar Arrow UDF over ONLY the text column: the
     other input columns never cross the Arrow boundary (they stay JVM-side
     and are re-attached by projection), which keeps the Python worker's
-    serialization bill proportional to the text, not the row width.
+    serialization bill proportional to the text, not the row width.  The
+    UDF builds its result straight from the matcher's row lists; no pandas
+    object is made.  The output is one projection over the UDF's struct
+    whose per-rule constants are SQL literals, so building it costs the
+    same few py4j calls at any rule count.
     """
     from pyspark.sql import functions as F
 
     crb = rb if isinstance(rb, CompiledRulebase) else compile_rulebase(rb)
-    # The udf returns only the per-row-varying fields; constants-per-rule
-    # (tags, rulebase location) are reconstructed JVM-side from rule_id via
-    # literal maps — they never cross the Arrow boundary, cutting the
-    # JVM-side batch decode that co-bottlenecks with Python at high core
-    # counts.
-    # originalmsg is also rebuilt JVM-side: it is by definition the input
-    # text of unmatched rows (match_batch sets it iff unparsed), and the
-    # JVM still holds the text column — shipping it back through Arrow
-    # would double-transfer every unparsed row's text.
-    struct_ddl = (
-        "struct<rule_id:int, fields_json:string, "
-        "unparsed_data:string, parsed_to:int>"
+
+    # The udf returns only the per-row-varying fields.
+    @F.arrow_udf(
+        "struct<rule_id:int, fields_json:string, unparsed_data:string, parsed_to:int>"
     )
-
-    @F.pandas_udf(struct_ddl)
-    def _match(s: pd.Series) -> pd.DataFrame:
-        return match_batch(crb, s).drop(columns=["originalmsg"])
-
-    out = (
-        df.withColumn("_m", _match(F.col(text_col)))
-        .select("*", "_m.*")
-        .drop("_m")
-        .withColumn(
-            "originalmsg",
-            F.when(F.col("unparsed_data").isNotNull(), F.col(text_col)),
+    def _match(texts: pa.Array) -> pa.Array:
+        rule_id, fields_json, unparsed, _, parsed_to = _match_rows(
+            crb, texts.to_numpy(zero_copy_only=False),
+            texts.is_valid().to_numpy(zero_copy_only=False))
+        return pa.StructArray.from_arrays(
+            [pa.array(rule_id, pa.int32()), pa.array(fields_json, pa.string()),
+             pa.array(unparsed, pa.string()), pa.array(parsed_to, pa.int32())],
+            names=["rule_id", "fields_json", "unparsed_data", "parsed_to"],
         )
-    )
+
+    # Constants-per-rule (tags, rulebase location) are reconstructed
+    # JVM-side from rule_id via literal maps: they never cross the Arrow
+    # boundary, cutting the JVM-side batch decode that co-bottlenecks with
+    # Python at high core counts.
     if crb.rules:
-        ids = F.array(*[F.lit(cr.rule_id) for cr in crb.rules])
-        tags_map = F.map_from_arrays(
-            ids, F.array(*[F.array(*[F.lit(t) for t in cr.tags]) for cr in crb.rules])
-        )
-        file_map = F.map_from_arrays(
-            ids, F.array(*[F.lit(cr.rule.rb_file) for cr in crb.rules])
-        )
-        line_map = F.map_from_arrays(
-            ids, F.array(*[F.lit(cr.rule.rb_line) for cr in crb.rules])
-        )
-        out = (
-            out.withColumn("tags", F.element_at(tags_map, F.col("rule_id")))
-            .withColumn("rb_file", F.element_at(file_map, F.col("rule_id")))
-            .withColumn("rb_line", F.element_at(line_map, F.col("rule_id")).cast("int"))
-        )
+        tags = _rule_lookup(crb, (
+            "array(" + ", ".join(_sql_str(t) for t in cr.tags) + ")" for cr in crb.rules))
+        rb_file = _rule_lookup(crb, (_sql_str(cr.rule.rb_file) for cr in crb.rules))
+        rb_line = "CAST({} AS INT)".format(
+            _rule_lookup(crb, (str(int(cr.rule.rb_line)) for cr in crb.rules)))
     else:
-        out = (
-            out.withColumn("tags", F.lit(None).cast("array<string>"))
-            .withColumn("rb_file", F.lit(None).cast("string"))
-            .withColumn("rb_line", F.lit(None).cast("int"))
-        )
+        tags = "CAST(NULL AS ARRAY<STRING>)"
+        rb_file = "CAST(NULL AS STRING)"
+        rb_line = "CAST(NULL AS INT)"
+    text = F.col(text_col)
+    out = df.select("*", _match(text).alias("_m"), text.alias("_t"))
+    # originalmsg is rebuilt JVM-side too: it is by definition the input
+    # text of unmatched rows (the matcher sets it iff unparsed), and the JVM
+    # still holds the text column -- shipping it back through Arrow would
+    # double-transfer every unparsed row's text.
+    match_sql = {
+        "rule_id": "_m.rule_id",
+        "tags": tags,
+        "fields_json": "_m.fields_json",
+        "unparsed_data": "_m.unparsed_data",
+        "originalmsg": "CASE WHEN _m.unparsed_data IS NOT NULL THEN _t END",
+        "parsed_to": "_m.parsed_to",
+        "rb_file": rb_file,
+        "rb_line": rb_line,
+    }
     # canonical column order is part of the API: input columns first, then
     # the MATCH_FIELDS_DDL order
-    match_cols = [p.split()[0] for p in MATCH_FIELDS_DDL.split(", ")]
-    return out.select(*df.columns, *match_cols)
+    names = [f.split()[0] for f in MATCH_FIELDS_DDL.split(", ")]
+    return out.selectExpr(
+        *("`" + c.replace("`", "``") + "`" for c in df.columns),
+        *(f"{match_sql[n]} AS {n}" for n in names),
+    )

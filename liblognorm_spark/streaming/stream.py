@@ -1,7 +1,7 @@
 """Structured Streaming variant of the pipeline.
 
 The batch operators compose unchanged: normalize_df (a struct-returning
-pandas_udf) works on streaming DataFrames, so the stream is readStream ->
+Arrow UDF) works on streaming DataFrames, so the stream is readStream ->
 parse -> enrich -> route -> windowed aggregate / fan-out sinks, with
 watermarks for late data and checkpointLocation for exactly-once resume
 — the incremental execution mode the reference CLI (stdin loop,

@@ -108,3 +108,23 @@ def test_dot_graph(tmp_path):
     text = dot.read_text()
     assert text.startswith("digraph pdag")
     assert "tags: a" in text and "tags: b" in text and "number" in text
+
+
+def test_dot_graph_shares_literal_prefix():
+    # the drawn graph is the PDAG: rules share a literal prefix mid-literal
+    # and a single-child literal chain is one node
+    import re
+
+    from liblognorm_spark.compiler.compiler import compile_rulebase
+    from liblognorm_spark.compiler.dot import rulebase_to_dot
+
+    crb = compile_rulebase(Rulebase.from_string(
+        "version=2\nrule=:ab %x:word%\nrule=:ac %y:word%\n"))
+    text = rulebase_to_dot(crb)
+    labels = dict(re.findall(r'(n\d+) \[label="([^"]*)"', text))
+    edges = re.findall(r"(n\d+) -> (n\d+);", text)
+    a = [n for n, lab in labels.items() if lab == "'a'"]
+    assert len(a) == 1, text
+    assert sorted(labels[d] for s, d in edges if s == a[0]) == ["'b '", "'c '"]
+    assert [s for s, d in edges if d == a[0]] == ["n1"]  # a root child
+    assert sum(lab.startswith("rule ") for lab in labels.values()) == 2
