@@ -14,6 +14,12 @@ import argparse
 import json as _json
 import sys
 
+# flags whose output only the in-process path produces: --spark refuses
+# them rather than silently ignoring them
+SPARK_REFUSED = (("-T", "add_original"), ("-L", "line_nbr"), ("-U", "nbr_unparsed"),
+                 ("-H", "summary"), ("-s", "stats"), ("-S", "ext_stats_file"),
+                 ("-x", "stats_dot_file"))
+
 
 def build_parser():
     p = argparse.ArgumentParser(prog="lognorm-spark", description=__doc__)
@@ -75,6 +81,11 @@ def main(argv=None) -> int:
               f"{__version__} compatible)", file=sys.stderr)
         print("\tadvanced stats: not available", file=sys.stderr)
         return 1
+    if args.spark:
+        for flag, dest in SPARK_REFUSED:
+            if getattr(args, dest):
+                print(f"error: {flag} is not supported with --spark", file=sys.stderr)
+                return 1
     from liblognorm_spark.compiler.compiler import compile_rulebase
     from liblognorm_spark.encoders import ENCODERS
     from liblognorm_spark.rulebase.loader import Rulebase
@@ -134,14 +145,7 @@ def main(argv=None) -> int:
 
     import pandas as pd
 
-    res = match_batch(
-        crb,
-        pd.Series(lines, dtype=object),
-        add_rule_location="addRuleLocation" in opts,
-        add_originalmsg="addOriginalMsg" in opts,
-        add_rule_mockup="addRule" in opts,
-        add_exec_path="addExecPath" in opts,
-    )
+    res = match_batch(crb, pd.Series(lines, dtype=object))
     num_parsed = num_unparsed = num_wrongtag = 0
     rule_hits: dict[int, int] = {}
     for i in range(len(res)):
@@ -219,7 +223,7 @@ def _main_spark(args, crb, csv_fields) -> int:
     from pyspark.sql import functions as F
 
     from liblognorm_spark.encoders import encode_df
-    from liblognorm_spark.pipeline.pipeline import route_stage
+    from liblognorm_spark.pipeline.pipeline import route_stage, write_sinks
     from liblognorm_spark.runtime.matcher import normalize_df
     from liblognorm_spark.session import get_spark
 
@@ -241,12 +245,7 @@ def _main_spark(args, crb, csv_fields) -> int:
         # real-use path: encode + fan out to a partitioned sink tree on the
         # executors — nothing is funneled through the driver
         routed = encode_df(route_stage(out), args.encoder, csv_fields)
-        (
-            routed.select("sink", "encoded")
-            .write.mode("overwrite")
-            .partitionBy("sink")
-            .parquet(args.out_dir)
-        )
+        write_sinks(routed.select("sink", "encoded"), args.out_dir)
         return 0
     out = encode_df(out, args.encoder, csv_fields)
     # CLI-parity path: rows print through the driver (fine for interactive

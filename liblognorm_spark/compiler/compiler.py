@@ -593,6 +593,7 @@ class CompiledRulebase:
     errors: list[str] = field(default_factory=list)
     cohorts: list = field(default_factory=list)  # MatchCohort | CompiledRule
     version: int = 2  # rulebase engine version (1 = no version=2 header)
+    opts: frozenset = frozenset()  # context options (Rulebase.opts), as on ln_ctx
 
     @property
     def ordered_rules(self):
@@ -637,4 +638,5 @@ def compile_rulebase(rb: Rulebase) -> CompiledRulebase:
         errors=list(rb.errors),
         cohorts=cohorts,
         version=getattr(rb, "version", 2),
+        opts=frozenset(rb.opts),
     )

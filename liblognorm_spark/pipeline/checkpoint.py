@@ -3,20 +3,13 @@
 The input is split into chunks (hash of url modulo n_chunks — stable under
 re-runs and independent of physical file layout).  Chunks are processed in
 WAVES: one wave = ONE Spark job that scans the input once, computes every
-chunk in the wave, and writes them all with a single
-``partitionBy(chunk, sink)`` dynamic-overwrite write.  After the wave's
-files are durably committed, each chunk id is appended to a JSON manifest;
-a restarted job skips completed chunks, and a crash mid-wave is safe
-because the retry overwrites exactly the wave's partition directories.
-
-Scan amplification vs re-work is an explicit knob: ``wave_size=None``
-(default) processes all remaining chunks in ONE scan — total reads are
-O(input), not O(n_chunks * input) like a per-chunk filter loop would be.
-Smaller waves bound the work lost to a crash at the cost of
-ceil(remaining/wave_size) scans.  At 100 TB, prefer aligning chunks to
-input file groups (each wave then reads only its own files and even
-wave_size=1 has zero amplification); the url-hash chunking here is the
-layout-independent fallback.
+chunk in the wave, and writes them all with one
+``pipeline.write_sinks(by=("chunk",))`` dynamic-overwrite write.  After the
+wave's files are durably committed, each chunk id is appended to a JSON
+manifest; a restarted job skips completed chunks, and a crash mid-wave is
+safe because the retry overwrites exactly the wave's partition directories.
+All remaining chunks run in one wave, so total reads are O(input), not
+O(n_chunks * input) like a per-chunk filter loop.
 
 This is the batch analogue of Structured Streaming's checkpointLocation
 (which streaming/stream.py uses directly) and satisfies the north rule's
@@ -52,17 +45,18 @@ class Manifest:
 
 
 def run_resumable(spark, pages, out_dir: str, n_chunks: int = 8,
-                  rulebase_text: str | None = None, fail_after: int | None = None,
-                  wave_size: int | None = None):
+                  rulebase_text: str | None = None, fail_after: int | None = None):
     """Run the pipeline chunked with manifest resume (see module docstring).
 
     `fail_after` (testing): raise after N chunks have committed, simulating
     a crash; waves are sized to that boundary so the manifest state is
     deterministic.  Returns the manifest.  Sinks land under
-    out_dir/chunk=<id>/sink=<sink>/ with per-chunk partition lineage."""
+    out_dir/chunk=<id>/sink=<sink>/ with per-chunk partition lineage; the
+    manifest's "format" is the sink format actually written."""
     from pyspark.sql import functions as F
 
     from liblognorm_spark.pipeline import pipeline as PL
+    from liblognorm_spark.pipeline.metrics import partition_lineage
 
     os.makedirs(out_dir, exist_ok=True)
     man = Manifest(os.path.join(out_dir, "_manifest.json"))
@@ -76,10 +70,9 @@ def run_resumable(spark, pages, out_dir: str, n_chunks: int = 8,
         # already-complete manifest there is no work left to crash in, so
         # the resume returns cleanly like any other fail_after value.
         raise RuntimeError("simulated failure after 0 chunks")
-    if wave_size is None:
-        # fail_after=0 only reaches here with nothing remaining (guard
-        # above); fall through to the no-op loop with a valid step
-        wave_size = fail_after if fail_after else max(len(remaining), 1)
+    # fail_after=0 only reaches here with nothing remaining (guard above);
+    # fall through to the no-op loop with a valid step
+    wave_size = fail_after or max(len(remaining), 1)
     keyed = pages.withColumn("chunk", F.pmod(F.xxhash64("url"), F.lit(n_chunks)).cast("int"))
 
     done = 0
@@ -94,24 +87,8 @@ def run_resumable(spark, pages, out_dir: str, n_chunks: int = 8,
         parsed = parsed.persist()
         try:
             routed = PL.route_stage(PL.enrich_stage(spark, parsed))
-            (
-                routed.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("chunk", "sink")
-                .parquet(out_dir)
-            )
-            lineage_rows = (
-                parsed.withColumn("partition_id", F.spark_partition_id())
-                .groupBy("chunk", "partition_id")
-                .agg(
-                    F.count("*").alias("n_rows"),
-                    F.count(F.when(F.col("unparsed_data").isNull(), 1)).alias("n_parsed"),
-                    F.count(F.when(F.col("unparsed_data").isNotNull(), 1)).alias("n_unparsed"),
-                    F.min("doc_id").alias("min_doc_id"),
-                    F.max("doc_id").alias("max_doc_id"),
-                )
-                .collect()
-            )
+            man.state["format"] = PL.write_sinks(routed, out_dir, by=("chunk",))
+            lineage_rows = partition_lineage(parsed, "chunk").collect()
         finally:
             parsed.unpersist()
         by_chunk: dict[int, list] = {c: [] for c in wave}

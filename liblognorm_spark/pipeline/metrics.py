@@ -41,13 +41,14 @@ def rule_stats(parsed_df):
     )
 
 
-def partition_lineage(parsed_df):
-    """Per-partition lineage: rows in/parsed/unparsed per Spark partition.
-    At scale this is the audit trail for checkpoint resume (which input
-    slices completed) and for skew diagnosis."""
+def partition_lineage(parsed_df, *keys):
+    """Per-partition lineage: rows in/parsed/unparsed per Spark partition,
+    grouped by `keys` (e.g. ``"chunk"``) ahead of ``partition_id``;
+    unordered.  At scale this is the audit trail for checkpoint resume
+    (which input slices completed) and for skew diagnosis."""
     return (
         parsed_df.withColumn("partition_id", F.spark_partition_id())
-        .groupBy("partition_id")
+        .groupBy(*keys, "partition_id")
         .agg(
             F.count("*").alias("n_rows"),
             F.count(F.when(F.col("unparsed_data").isNull(), 1)).alias("n_parsed"),
@@ -55,7 +56,6 @@ def partition_lineage(parsed_df):
             F.min("doc_id").alias("min_doc_id"),
             F.max("doc_id").alias("max_doc_id"),
         )
-        .orderBy("partition_id")
     )
 
 

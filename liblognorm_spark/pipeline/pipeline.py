@@ -14,8 +14,9 @@ Catalyst handles pushdown/pruning/broadcast/AQE:
 * aggregate— per-sink counts (the reference's run counters,
   src/lognormalizer.c:258-265)
 
-Partitioning: an explicit repartition by xxhash64(url) with a salt column
-for the hot host keeps the match stage balanced under host skew; AQE
+Partitioning: salting is opt-in through ``parse_stage(salt_parts=)``, an
+explicit repartition by xxhash64(url) that spreads the hot host across
+partitions before the match stage; ``run_pipeline`` does not salt.  AQE
 (enabled in session.py) re-splits skewed post-shuffle partitions.
 """
 
@@ -94,9 +95,14 @@ def aggregate_stage(routed):
     return routed.groupBy("sink").agg(F.count("*").alias("n")).orderBy("sink")
 
 
-def write_sinks(routed, out_dir: str, fmt: str = "parquet") -> str:
-    """Single-pass fan-out: partitionBy(sink) writes one directory per sink.
-    Returns the format actually written.
+def write_sinks(routed, out_dir: str, fmt: str = "parquet", by: tuple = ()) -> str:
+    """The one sink writer (batch, checkpoint waves, stream fan-out, CLI
+    ``--out``).  Single-pass fan-out: partitionBy(*by, sink) writes one
+    directory per sink under the leading partition columns `by` (``chunk``,
+    ``epoch``).  Returns the format actually written.
+
+    A non-empty `by` selects dynamic partition overwrite: a rerun replaces
+    exactly the partition directories it writes.
 
     A non-parquet `fmt` (e.g. iceberg) is written through its data source.
     When that source's jar is not on the classpath, the parquet directory
@@ -104,7 +110,10 @@ def write_sinks(routed, out_dir: str, fmt: str = "parquet") -> str:
     other failure propagates."""
     from py4j.protocol import Py4JJavaError
 
-    writer = routed.write.mode("overwrite").partitionBy("sink")
+    writer = routed.write.mode("overwrite")
+    if by:
+        writer = writer.option("partitionOverwriteMode", "dynamic")
+    writer = writer.partitionBy(*by, "sink")
     if fmt != "parquet":
         try:
             writer.format(fmt).save(out_dir)

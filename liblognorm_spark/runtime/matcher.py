@@ -226,26 +226,15 @@ def _exec_path_of(crb: CompiledRulebase, rule) -> str:
     return s
 
 
-def match_batch(crb: CompiledRulebase, texts: pd.Series,
-                add_rule_location: bool = False,
-                add_originalmsg: bool = False,
-                add_rule_mockup: bool = False,
-                add_exec_path: bool = False) -> pd.DataFrame:
+def match_batch(crb: CompiledRulebase, texts: pd.Series) -> pd.DataFrame:
     """Normalize a batch of messages.  Returns a DataFrame with columns
     rule_id, fields_json, unparsed_data, originalmsg and parsed_to,
     index-aligned positionally with `texts`.  The per-rule constants
     (tags, rulebase location) are not built here: normalize_df derives
-    them JVM-side from rule_id.
-
-    `add_rule_location` mirrors LN_CTXOPT_ADD_RULE_LOCATION
-    (src/pdag.c:1254-1263: metadata.rule.location {file,line});
-    `add_originalmsg` mirrors LN_CTXOPT_ADD_ORIGINALMSG
-    (src/pdag.c:1672-1677); `add_rule_mockup` mirrors LN_CTXOPT_ADD_RULE
-    (src/pdag.c:1246-1251: metadata.rule.mockup, the matched rule's
-    template)."""
+    them JVM-side from rule_id.  Matched events carry the decorations the
+    rulebase's context options (``crb.opts``) ask for, see _match_rows."""
     rule_id, fields_json, unparsed, originalmsg, parsed_to = _match_rows(
-        crb, texts.to_numpy(dtype=object), texts.notna().to_numpy(),
-        add_rule_location, add_originalmsg, add_rule_mockup, add_exec_path)
+        crb, texts.to_numpy(dtype=object), texts.notna().to_numpy())
     return pd.DataFrame(
         {
             "rule_id": pd.array(rule_id, dtype="int32"),
@@ -257,15 +246,19 @@ def match_batch(crb: CompiledRulebase, texts: pd.Series,
     )
 
 
-def _match_rows(crb: CompiledRulebase, tvals: np.ndarray, notna: np.ndarray,
-                add_rule_location: bool = False,
-                add_originalmsg: bool = False,
-                add_rule_mockup: bool = False,
-                add_exec_path: bool = False) -> tuple:
+def _match_rows(crb: CompiledRulebase, tvals: np.ndarray, notna: np.ndarray) -> tuple:
     """The matcher core shared by :func:`match_batch` and the Arrow UDF:
     `tvals` is an object array of texts and `notna` its validity mask.
     Returns the five column lists rule_id, fields_json, unparsed_data,
-    originalmsg and parsed_to."""
+    originalmsg and parsed_to.
+
+    Matched events are decorated per the context options on the rulebase,
+    as the reference keeps them on ``ln_ctx``: addRuleLocation mirrors
+    LN_CTXOPT_ADD_RULE_LOCATION (src/pdag.c:1254-1263:
+    metadata.rule.location {file,line}), addOriginalMsg
+    LN_CTXOPT_ADD_ORIGINALMSG (src/pdag.c:1672-1677), addRule
+    LN_CTXOPT_ADD_RULE (src/pdag.c:1246-1251: metadata.rule.mockup, the
+    matched rule's template) and addExecPath LN_CTXOPT_ADD_EXEC_PATH."""
     n = len(tvals)
     # plain lists: scalar assignment is ~3x cheaper than numpy setitem
     rule_id: list = [-1] * n
@@ -284,6 +277,12 @@ def _match_rows(crb: CompiledRulebase, tvals: np.ndarray, notna: np.ndarray,
         walk_flat,
         walk_seq,
     )
+
+    opts = crb.opts
+    add_rule_location = "addRuleLocation" in opts
+    add_originalmsg = "addOriginalMsg" in opts
+    add_rule_mockup = "addRule" in opts
+    add_exec_path = "addExecPath" in opts
 
     def _decorate(ev, rule, t):
         """Shared option-driven event decoration — ONE definition so the
@@ -460,21 +459,15 @@ def _match_rows(crb: CompiledRulebase, tvals: np.ndarray, notna: np.ndarray,
     # possibly match); the pruned rules' partial-literal parsedTo credit is
     # carried over from the trie descent depth
     # memoized by FULL text: the result is a pure function of the text
-    # (same rulebase), and log streams repeat unparsed lines heavily — a
-    # malformed heartbeat repeats for hours — so identical rows pay one
-    # dict hit instead of a re-walk.  The no-options path (the Spark hot
-    # path) keeps the memo across batches on the compiled rulebase, size-
-    # capped; option-bearing calls memoize per batch (the options change
-    # the emitted event).
-    if decorate_needed:
-        fb_memo: dict = {}
-        fb_bytes = 0
-    else:
-        fb_memo = getattr(crb, "_fb_memo", None)
-        if fb_memo is None:
-            fb_memo = crb._fb_memo = {}
-            crb._fb_memo_bytes = 0
-        fb_bytes = crb._fb_memo_bytes
+    # (same rulebase and options), and log streams repeat unparsed lines
+    # heavily — a malformed heartbeat repeats for hours — so identical rows
+    # pay one dict hit instead of a re-walk.  The memo is kept across
+    # batches on the compiled rulebase, size-capped.
+    fb_memo = getattr(crb, "_fb_memo", None)
+    if fb_memo is None:
+        fb_memo = crb._fb_memo = {}
+        crb._fb_memo_bytes = 0
+    fb_bytes = crb._fb_memo_bytes
     fb_room = _FB_MEMO_MAX - len(fb_memo)
     for pos in np.flatnonzero(remaining | need_walker).tolist():
         t = tvals[pos]
@@ -503,8 +496,7 @@ def _match_rows(crb: CompiledRulebase, tvals: np.ndarray, notna: np.ndarray,
         else:
             unparsed[pos] = up
             originalmsg[pos] = om
-    if not decorate_needed:
-        crb._fb_memo_bytes = fb_bytes
+    crb._fb_memo_bytes = fb_bytes
     return rule_id, fields_json, unparsed, originalmsg, parsed_to
 
 
@@ -576,6 +568,9 @@ def normalize_df(df, rb: Rulebase | CompiledRulebase, text_col: str = "text"):
     if crb.rules:
         tags = _rule_lookup(crb, (
             "array(" + ", ".join(_sql_str(t) for t in cr.tags) + ")" for cr in crb.rules))
+        if not any(cr.tags for cr in crb.rules):
+            # Spark types a map of only empty array() literals array<void>
+            tags = f"CAST({tags} AS ARRAY<STRING>)"
         rb_file = _rule_lookup(crb, (_sql_str(cr.rule.rb_file) for cr in crb.rules))
         rb_line = "CAST({} AS INT)".format(
             _rule_lookup(crb, (str(int(cr.rule.rb_line)) for cr in crb.rules)))

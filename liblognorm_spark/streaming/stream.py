@@ -2,19 +2,15 @@
 
 The batch operators compose unchanged: normalize_df (a struct-returning
 Arrow UDF) works on streaming DataFrames, so the stream is readStream ->
-parse -> enrich -> route -> windowed aggregate / fan-out sinks, with
-watermarks for late data and checkpointLocation for exactly-once resume
-— the incremental execution mode the reference CLI (stdin loop,
-src/lognormalizer.c:229-257) never had.
+``pipeline.parse_stage`` -> enrich -> route -> windowed aggregate /
+fan-out sinks, with watermarks for late data and checkpointLocation for
+exactly-once resume — the incremental execution mode the reference CLI
+(stdin loop, src/lognormalizer.c:229-257) never had.
 """
 
 from __future__ import annotations
 
-from liblognorm_spark.compiler.compiler import CompiledRulebase, compile_rulebase
-from liblognorm_spark.pipeline.fixture_rulebase import routing_rulebase
-from liblognorm_spark.pipeline.pipeline import route_stage
-from liblognorm_spark.rulebase.loader import Rulebase
-from liblognorm_spark.runtime.matcher import normalize_df
+from liblognorm_spark.pipeline.pipeline import route_stage, write_sinks
 
 PAGES_DDL = (
     "doc_id long, url string, warc_epoch long, text string, lang string, "
@@ -24,12 +20,6 @@ PAGES_DDL = (
 
 def stream_pages(spark, input_dir: str, schema: str = PAGES_DDL):
     return spark.readStream.schema(schema).parquet(input_dir)
-
-
-def normalize_stream(stream_df, rulebase_text: str | None = None, text_col: str = "text"):
-    rb = Rulebase.from_string(rulebase_text or routing_rulebase())
-    crb = compile_rulebase(rb)
-    return normalize_df(stream_df, crb, text_col=text_col)
 
 
 def windowed_sink_counts(parsed_stream, window: str = "5 minutes", watermark: str = "10 minutes"):
@@ -100,18 +90,13 @@ def start_fanout_query(parsed_stream, out_dir: str, checkpoint_dir: str):
     therefore made IDEMPOTENT per epoch: output is partitioned by
     (epoch, sink) and written with dynamic partition overwrite, so a
     replayed epoch overwrites exactly its own partition directories instead
-    of appending duplicates.  checkpointLocation makes restart skip
-    committed batches entirely."""
+    of appending duplicates (``write_sinks(by=("epoch",))``).
+    checkpointLocation makes restart skip committed batches entirely."""
     from pyspark.sql import functions as F
 
     def write_batch(df, epoch_id: int):
-        routed = route_stage(df).withColumn("epoch", F.lit(epoch_id))
-        (
-            routed.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch", "sink")
-            .parquet(out_dir)
-        )
+        write_sinks(route_stage(df).withColumn("epoch", F.lit(epoch_id)), out_dir,
+                    by=("epoch",))
 
     return (
         parsed_stream.writeStream.foreachBatch(write_batch)

@@ -50,6 +50,16 @@ def test_iceberg_write_falls_back_to_parquet(spark, tmp_path):
     assert sorted(r["sink"] for r in back.select("sink").collect()) == ["s1", "s1", "s2"]
     # partition directories exist (the fan-out layout survived the fallback)
     assert any(d.startswith("sink=") for d in os.listdir(out))
+    # leading partition columns take the dynamic-overwrite path: rewriting
+    # chunk 1 leaves chunk 0's directory in place
+    chunked = spark.createDataFrame(
+        [("a", 0, "s1"), ("b", 1, "s2")], "text string, chunk int, sink string")
+    out2 = str(tmp_path / "chunked")
+    for df2 in (chunked, chunked.filter("chunk = 1")):
+        assert write_sinks(df2, out2, fmt="iceberg", by=("chunk",)) == "parquet"
+    assert os.listdir(os.path.join(out2, "chunk=0")) == ["sink=s1"]
+    assert sorted(tuple(r) for r in spark.read.parquet(out2).collect()) == [
+        ("a", 0, "s1"), ("b", 1, "s2")]
 
 
 class _StubJavaError:
@@ -66,16 +76,24 @@ class _StubJavaError:
 
 class _StubIO:
     """Stands in for a DataFrameWriter / DataFrameReader whose non-parquet
-    save/load raises `exc`; records the parquet paths it is asked for."""
+    save/load raises `exc`; records the parquet paths, options and
+    partition columns it is asked for."""
 
     def __init__(self, exc):
         self.exc = exc
         self.parquet_paths = []
+        self.options = {}
+        self.partition_cols = None
 
     def mode(self, _):
         return self
 
-    def partitionBy(self, *_):
+    def option(self, key, value):
+        self.options[key] = value
+        return self
+
+    def partitionBy(self, *cols):
+        self.partition_cols = cols
         return self
 
     def format(self, _):
@@ -125,6 +143,13 @@ def test_missing_data_source_falls_back_to_parquet():
 
     writer = _StubIO(_java_error("DATA_SOURCE_NOT_FOUND"))
     assert write_sinks(SimpleNamespace(write=writer), "out", fmt="iceberg") == "parquet"
+    assert writer.partition_cols == ("sink",) and writer.options == {}
+    chunked = _StubIO(_java_error("DATA_SOURCE_NOT_FOUND"))
+    assert write_sinks(SimpleNamespace(write=chunked), "out", fmt="iceberg",
+                       by=("chunk",)) == "parquet"
+    assert chunked.partition_cols == ("chunk", "sink")
+    assert chunked.options == {"partitionOverwriteMode": "dynamic"}
+    assert chunked.parquet_paths == ["out"]
     reader = _StubIO(_java_error("DATA_SOURCE_NOT_FOUND"))
     read_logs(SimpleNamespace(read=reader), "out", fmt="iceberg")
     assert writer.parquet_paths == reader.parquet_paths == ["out"]

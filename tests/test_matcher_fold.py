@@ -27,8 +27,8 @@ from liblognorm_spark.runtime import matcher as M
 from liblognorm_spark.runtime.walker import normalize_message
 
 
-def _assert_matches_walker(rb_text: str, texts: list, **opts):
-    crb = compile_rulebase(Rulebase.from_string(rb_text))
+def _assert_matches_walker(rb_text: str, texts: list, opts=frozenset()):
+    crb = compile_rulebase(Rulebase.from_string(rb_text, opts=opts))
     s = pd.Series(texts, dtype=object)
     fallback_texts = []
 
@@ -38,10 +38,10 @@ def _assert_matches_walker(rb_text: str, texts: list, **opts):
 
     M.normalize_message = recording
     try:
-        out = M.match_batch(crb, s, **opts)
+        out = M.match_batch(crb, s)
     finally:
         M.normalize_message = normalize_message
-    assert out.equals(M.match_batch(crb, s, **opts))  # warm memos
+    assert out.equals(M.match_batch(crb, s))  # warm memos
     # routing must reach every matching rule: the walker fallback only
     # sees rows that no rule matches (no fixture has a rejected row that
     # another rule matches)
@@ -58,12 +58,12 @@ def _assert_matches_walker(rb_text: str, texts: list, **opts):
             assert out["originalmsg"][i] == t
         else:
             assert out["unparsed_data"][i] is None, t
-            if opts.get("add_originalmsg"):
+            if "addOriginalMsg" in opts:
                 assert got.pop("originalmsg") == t
             meta = got.pop("metadata", {}).get("rule", {})
-            if opts.get("add_rule_location"):
+            if "addRuleLocation" in opts:
                 assert meta["location"] == {"file": rule.rb_file, "line": rule.rb_line}
-            if opts.get("add_rule_mockup"):
+            if "addRule" in opts:
                 assert meta["mockup"] == rule.raw
         assert got == ev, t
     return out
@@ -125,8 +125,7 @@ def test_complex_fields_and_annotations_fold_identically():
 def test_decorated_output_fold_identically():
     rb = "version=2\n" + _pad_rules() + "\n"
     _assert_matches_walker(rb, _pad_rows() + ["junk"],
-                           add_originalmsg=True, add_rule_location=True,
-                           add_rule_mockup=True)
+                           opts={"addOriginalMsg", "addRuleLocation", "addRule"})
 
 
 def test_prefilter_longer_than_dispatch_window():

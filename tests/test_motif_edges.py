@@ -135,11 +135,10 @@ def test_rule_metadata_options():
     from liblognorm_spark.runtime.matcher import match_batch
     import json
 
-    crb = compile_rulebase(Rulebase.from_string("version=2\nrule=t:%w:word%\n"))
-    r = match_batch(
-        crb, pd.Series(["hi"]),
-        add_rule_location=True, add_rule_mockup=True, add_originalmsg=True,
-    )
+    crb = compile_rulebase(Rulebase.from_string(
+        "version=2\nrule=t:%w:word%\n",
+        opts={"addRuleLocation", "addRule", "addOriginalMsg"}))
+    r = match_batch(crb, pd.Series(["hi"]))
     ev = json.loads(r["fields_json"][0])
     assert ev["originalmsg"] == "hi"
     assert ev["metadata"]["rule"]["mockup"] == "%w:word%"
@@ -243,9 +242,9 @@ def test_cohort_keeps_custom_fragment_after_walker_only_rule():
 
 def test_fallback_memo_batches_and_options():
     """The cross-batch unmatched-diagnostics memo (matcher._FB_MEMO_MAX)
-    must be invisible: repeated batches give identical results, and
-    option-bearing calls (which decorate the event) must NOT read or
-    poison the no-options cache."""
+    must be invisible: repeated batches give identical results, and a
+    rulebase whose context options decorate the event never shares a memo
+    with one that has none."""
     import pandas as pd
 
     from liblognorm_spark.compiler.compiler import compile_rulebase
@@ -262,16 +261,16 @@ def test_fallback_memo_batches_and_options():
     assert a["unparsed_data"][1] == a["unparsed_data"][3] == "x] nope"
     assert a["originalmsg"][2] == "junk"
 
-    # options path decorates the matched event; a fallback-matched row
-    # must get the decoration even though the plain row was cached above
-    crb2 = compile_rulebase(Rulebase.from_string(
-        "version=2\nrule=t:%f:json%\n"))  # walker-only motif -> fallback
+    # options on the rulebase decorate the matched event; a fallback-
+    # matched row is decorated on a warm memo too, and each rulebase's memo
+    # holds only its own options' events
+    rb2 = "version=2\nrule=t:%f:json%\n"  # walker-only motif -> fallback
+    plain_crb = compile_rulebase(Rulebase.from_string(rb2))
+    deco_crb = compile_rulebase(Rulebase.from_string(rb2, opts={"addRuleLocation"}))
     t2 = pd.Series(['{"a": 1}'], dtype=object)
-    plain = match_batch(crb2, t2)
     import json as J
-    assert "metadata" not in J.loads(plain["fields_json"][0])
-    deco = match_batch(crb2, t2, add_rule_location=True)
-    assert J.loads(deco["fields_json"][0])["metadata"]["rule"]["location"]["line"] == 2
-    # and the decorated call did not poison the shared no-options memo
-    plain2 = match_batch(crb2, t2)
-    assert "metadata" not in J.loads(plain2["fields_json"][0])
+    for _ in range(2):  # cold, then served from each rulebase's memo
+        plain = match_batch(plain_crb, t2)
+        assert "metadata" not in J.loads(plain["fields_json"][0])
+        deco = match_batch(deco_crb, t2)
+        assert J.loads(deco["fields_json"][0])["metadata"]["rule"]["location"]["line"] == 2

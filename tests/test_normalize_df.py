@@ -110,6 +110,16 @@ def test_empty_rulebase_gives_typed_nulls(spark):
     assert rows == [_unparsed(0, "x 1"), _unparsed(1, "")]
 
 
+def test_untagged_rulebase_types_tags_as_strings(spark):
+    # every per-rule tag literal is an empty array(), which Spark alone
+    # would type array<void>
+    schema, rows = _run(spark, Rulebase.from_string("version=2\nrule=:y %v:word%\n"),
+                        ["y 2", "z"])
+    assert schema == _schema(tags_contain_null=True)
+    assert rows == [(0, "y 2", 0, [], '{"v":"2"}', None, None, 3, "--", 2),
+                    _unparsed(1, "z")]
+
+
 def test_file_loaded_rulebase_location(spark, tmp_path):
     path = tmp_path / "r.rulebase"
     path.write_text("version=2\n\nrule=t,u:x %v:word%\n")

@@ -60,6 +60,7 @@ def test_checkpoint_resume(spark, pages, tmp_path):
     assert total == 500
     # lineage recorded per chunk
     assert all(man2.state["lineage"][str(c)] for c in range(4))
+    assert man2.state["format"] == "parquet"
     # fail_after=0 on an already-complete manifest: nothing left to crash
     # in, so the resume reaches completion like any other fail_after value
     man3 = run_resumable(spark, pages, out, n_chunks=4, fail_after=0)
@@ -67,8 +68,8 @@ def test_checkpoint_resume(spark, pages, tmp_path):
 
 
 def test_streaming_window_counts(spark, pages, tmp_path):
+    from liblognorm_spark.pipeline.pipeline import parse_stage
     from liblognorm_spark.streaming.stream import (
-        normalize_stream,
         start_memory_query,
         stream_pages,
         windowed_sink_counts,
@@ -78,7 +79,7 @@ def test_streaming_window_counts(spark, pages, tmp_path):
     pages.write.mode("overwrite").parquet(src)
     stream = stream_pages(spark, src)
     assert stream.isStreaming
-    agg = windowed_sink_counts(normalize_stream(stream), window="1 hour")
+    agg = windowed_sink_counts(parse_stage(spark, stream), window="1 hour")
     q = start_memory_query(agg, name="t_stream", output_mode="complete")
     try:
         q.processAllAvailable()
@@ -91,13 +92,14 @@ def test_streaming_window_counts(spark, pages, tmp_path):
 
 
 def test_streaming_fanout_resume(spark, pages, tmp_path):
-    from liblognorm_spark.streaming.stream import normalize_stream, start_fanout_query, stream_pages
+    from liblognorm_spark.pipeline.pipeline import parse_stage
+    from liblognorm_spark.streaming.stream import start_fanout_query, stream_pages
 
     src = str(tmp_path / "src")
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
     pages.write.mode("overwrite").parquet(src)
-    q = start_fanout_query(normalize_stream(stream_pages(spark, src)), out, ckpt)
+    q = start_fanout_query(parse_stage(spark, stream_pages(spark, src)), out, ckpt)
     try:
         q.processAllAvailable()
     finally:
@@ -105,7 +107,7 @@ def test_streaming_fanout_resume(spark, pages, tmp_path):
     n1 = spark.read.parquet(out).count()
     assert n1 == 500
     # restart with same checkpoint: no reprocessing of the same files
-    q2 = start_fanout_query(normalize_stream(stream_pages(spark, src)), out, ckpt)
+    q2 = start_fanout_query(parse_stage(spark, stream_pages(spark, src)), out, ckpt)
     try:
         q2.processAllAvailable()
     finally:
@@ -117,7 +119,7 @@ def test_streaming_fanout_resume(spark, pages, tmp_path):
     import shutil
 
     shutil.rmtree(ckpt)
-    q3 = start_fanout_query(normalize_stream(stream_pages(spark, src)), out, ckpt)
+    q3 = start_fanout_query(parse_stage(spark, stream_pages(spark, src)), out, ckpt)
     try:
         q3.processAllAvailable()
     finally:
@@ -174,6 +176,70 @@ def test_cli_spark_sink_mode(spark, tmp_path):
     assert set(got) == {"ssh", "kv", "unparsed"}
     assert json.loads(got["ssh"])["w"] == "hello"
     assert "unparsed-data" in json.loads(got["unparsed"])
+
+
+def test_every_sink_write_goes_through_write_sinks(spark, pages, tmp_path, monkeypatch):
+    """pipeline.write_sinks is the one sink writer: a checkpoint wave, a
+    stream fan-out epoch and a CLI --out run each reach it exactly once."""
+    from liblognorm_spark.cli import main
+    from liblognorm_spark.pipeline import pipeline as PL
+    from liblognorm_spark.pipeline.checkpoint import run_resumable
+    from liblognorm_spark.streaming import stream
+
+    calls = []
+    real = PL.write_sinks
+
+    def counting(routed, out_dir, fmt="parquet", by=()):
+        calls.append(by)
+        return real(routed, out_dir, fmt, by)
+
+    monkeypatch.setattr(PL, "write_sinks", counting)
+    monkeypatch.setattr(stream, "write_sinks", counting)
+
+    out = str(tmp_path / "chunks")
+    with pytest.raises(RuntimeError, match="simulated failure"):
+        run_resumable(spark, pages, out, n_chunks=4, fail_after=1)  # one wave
+    run_resumable(spark, pages, out, n_chunks=4)  # the other three: one wave
+    assert calls == [("chunk",)] * 2
+
+    calls.clear()
+    src, fan = str(tmp_path / "src"), str(tmp_path / "fan")
+    pages.filter("doc_id < 250").write.parquet(src)
+    q = stream.start_fanout_query(PL.parse_stage(spark, stream.stream_pages(spark, src)),
+                                  fan, str(tmp_path / "ckpt"))
+    try:
+        q.processAllAvailable()
+        pages.filter("doc_id >= 250").write.mode("append").parquet(src)
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    epochs = [d for d in os.listdir(fan) if d.startswith("epoch=")]
+    assert len(epochs) == 2 and calls == [("epoch",)] * 2
+    assert spark.read.parquet(fan).count() == 500
+
+    calls.clear()
+    rb = tmp_path / "t.rulebase"
+    rb.write_text("version=2\nrule=ssh:sshd: %w:word%\n")
+    inp = tmp_path / "in.log"
+    inp.write_text("sshd: hello\njunk\n")
+    assert main(["-r", str(rb), "--spark", "--out", str(tmp_path / "cli"), str(inp)]) == 0
+    assert calls == [()]
+
+
+@pytest.mark.parametrize("flag", [["-T"], ["-L"], ["-U"], ["-H"], ["-s"],
+                                  ["-S", "stats.tsv"], ["-x", "stats.dot"]],
+                         ids=lambda flag: flag[0])
+def test_cli_spark_refuses_ignored_flags(flag, monkeypatch, capsys):
+    """--spark has no counterpart for these in-process outputs: it exits 1
+    naming the flag, before any Spark session starts."""
+    from liblognorm_spark import cli, session
+
+    def no_spark(*a, **k):
+        raise AssertionError("get_spark must not run")
+
+    monkeypatch.setattr(session, "get_spark", no_spark)
+    assert cli.main(["-R", "version=2\nrule=:%w:word%\n", "--spark", *flag, "in.log"]) == 1
+    assert f"{flag[0]} is not supported with --spark" in capsys.readouterr().err
 
 
 def test_cli_invalid_invocation(tmp_path):
@@ -244,10 +310,11 @@ def test_exec_path_backtrack_deviation():
     # shared literal prefix; the number branch is tried first and fails on
     # 'xyz', forcing a backtrack into the word branch
     rb = Rulebase.from_string(
-        "version=2\nrule=num:a %n:number%\nrule=word:a %w:word%\n"
+        "version=2\nrule=num:a %n:number%\nrule=word:a %w:word%\n",
+        opts={"addExecPath"},
     )
     crb = compile_rulebase(rb)
-    res = match_batch(crb, pd.Series(["a xyz"]), add_exec_path=True)
+    res = match_batch(crb, pd.Series(["a xyz"]))
     assert res["unparsed_data"][0] is None
     ev = json.loads(res["fields_json"][0])
     assert ev["w"] == "xyz" and "word" in ev["event.tags"]
@@ -327,18 +394,15 @@ def test_multimodal_plumbing(spark, pages):
 
 def test_stateful_host_counters(spark, pages, tmp_path):
     """applyInPandasWithState: state accumulates across micro-batches."""
-    from liblognorm_spark.streaming.stream import (
-        normalize_stream,
-        stateful_host_counters,
-        stream_pages,
-    )
+    from liblognorm_spark.pipeline.pipeline import parse_stage
+    from liblognorm_spark.streaming.stream import stateful_host_counters, stream_pages
 
     src = str(tmp_path / "src")
     ckpt = str(tmp_path / "ck")
     half1 = pages.filter("doc_id < 250")
     half2 = pages.filter("doc_id >= 250")
     half1.write.mode("overwrite").parquet(src)
-    agg = stateful_host_counters(normalize_stream(stream_pages(spark, src)))
+    agg = stateful_host_counters(parse_stage(spark, stream_pages(spark, src)))
     q = (agg.writeStream.outputMode("update").format("memory")
          .queryName("hostcnt").option("checkpointLocation", ckpt).start())
     try:
