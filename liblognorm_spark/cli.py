@@ -18,7 +18,7 @@ import sys
 # them rather than silently ignoring them
 SPARK_REFUSED = (("-T", "add_original"), ("-L", "line_nbr"), ("-U", "nbr_unparsed"),
                  ("-H", "summary"), ("-s", "stats"), ("-S", "ext_stats_file"),
-                 ("-x", "stats_dot_file"))
+                 ("-x", "stats_dot_file"), ("-v", "verbose"))
 
 
 def build_parser():

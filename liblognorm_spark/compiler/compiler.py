@@ -34,7 +34,7 @@ from typing import Callable, Optional
 
 from liblognorm_spark.compiler import motifs as M
 from liblognorm_spark.compiler.motifs import Reject
-from liblognorm_spark.rulebase.loader import Alt, PNode, Rule, Rulebase
+from liblognorm_spark.rulebase.loader import Alt, DropsCachesOnPickle, PNode, Rule, Rulebase
 from liblognorm_spark.runtime.walker import WalkState, _lit_prefix, _merge_key, attach
 
 RE_SP = r"[ \t\n\v\f\r]"
@@ -586,7 +586,7 @@ def order_rules(rules: list[Rule]) -> list[int]:
 
 
 @dataclass
-class CompiledRulebase:
+class CompiledRulebase(DropsCachesOnPickle):
     rules: list[CompiledRule]  # in match order
     types: dict
     annotations: dict
@@ -594,6 +594,9 @@ class CompiledRulebase:
     cohorts: list = field(default_factory=list)  # MatchCohort | CompiledRule
     version: int = 2  # rulebase engine version (1 = no version=2 header)
     opts: frozenset = frozenset()  # context options (Rulebase.opts), as on ln_ctx
+    # runtime.matcher's caches: the dispatch trie's closures, which plain
+    # pickle refuses, and memos that can outgrow the rulebase
+    _CACHES = ("_trie", "_dispatch_memo_cache", "_exec_paths", "_fb_memo", "_fb_memo_bytes")
 
     @property
     def ordered_rules(self):

@@ -4,9 +4,10 @@ All stages after the vectorized match are stock DataFrame operations so
 Catalyst handles pushdown/pruning/broadcast/AQE:
 
 * parse    — ``normalize_df`` (a struct-returning Arrow UDF over Arrow batches)
-* enrich   — broadcast hash joins against small lookup tables
-  (generalization of the reference's tag-driven constant annotation,
-  src/annot.c:214-239)
+* enrich   — broadcast hash joins against small lookup tables, built as
+  JVM local relations (a ``VALUES`` query) and so broadcast without a
+  Python worker (generalization of the reference's tag-driven constant
+  annotation, src/annot.c:214-239)
 * route    — one ``sink`` column + a single partitionBy("sink") write:
   fan-out without N passes over the data (the reference CLI's
   parsed/unparsed split, src/lognormalizer.c:236-249, generalized to
@@ -25,7 +26,7 @@ from __future__ import annotations
 from liblognorm_spark.compiler.compiler import compile_rulebase
 from liblognorm_spark.pipeline.fixture_rulebase import routing_rulebase
 from liblognorm_spark.rulebase.loader import Rulebase
-from liblognorm_spark.runtime.matcher import normalize_df
+from liblognorm_spark.runtime.matcher import _sql_str, normalize_df
 from liblognorm_spark.sources.readers import missing_data_source
 
 # deterministic enrichment lookup tables (FIXTURES.md §1)
@@ -40,9 +41,18 @@ LANG_MAP = [
 TLD_MAP = [("com", "generic"), ("org", "generic"), ("net", "generic"), ("de", "europe"), ("jp", "asia")]
 
 
+def local_relation(spark, rows, cols: str):
+    """`rows` of strings as a JVM local relation with columns `cols`: one
+    ``VALUES`` query, so it plans as a LocalTableScan and broadcasts without
+    a Python worker (``createDataFrame`` ships the rows through a Python
+    RDD).  Every value is quoted by ``_sql_str``."""
+    values = ", ".join("(" + ", ".join(_sql_str(v) for v in row) + ")" for row in rows)
+    return spark.sql(f"SELECT * FROM VALUES {values} AS t({cols})")
+
+
 def lookup_tables(spark):
-    lang = spark.createDataFrame(LANG_MAP, "lang string, lang_name string, lang_family string")
-    tld = spark.createDataFrame(TLD_MAP, "tld string, tld_region string")
+    lang = local_relation(spark, LANG_MAP, "lang, lang_name, lang_family")
+    tld = local_relation(spark, TLD_MAP, "tld, tld_region")
     return lang, tld
 
 

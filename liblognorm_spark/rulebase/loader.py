@@ -141,6 +141,21 @@ def scan_json_span(buf: str, i: int) -> tuple[Any, int]:
         raise RulebaseError(f"invalid json in '{span[:60]}': {e}")
 
 
+class DropsCachesOnPickle:
+    """Base of the objects the matcher and walker hang lazily built caches
+    on, named in ``_CACHES``.  Pickling leaves them out, so a rulebase ships
+    to the workers at the size of a freshly compiled one, whatever the
+    driver matched with it, and each worker rebuilds them on first use."""
+
+    _CACHES = ()
+
+    def __getstate__(self):
+        state = self.__dict__.copy()
+        for name in self._CACHES:
+            state.pop(name, None)
+        return state
+
+
 @dataclass
 class PNode:
     """One parser instance (a PDAG edge), reference src/pdag.h:81-89."""
@@ -157,12 +172,13 @@ class PNode:
 
 
 @dataclass
-class Alt:
+class Alt(DropsCachesOnPickle):
     """Alternative branches; all converge to the next seq item.
 
     Reference: src/pdag.c:895-936 (PRS_ADD_MODE_ALTERNATIVE)."""
 
     alts: list = field(default_factory=list)  # list[Seq]
+    _CACHES = ("_sorted_cache",)  # walker._sorted_alts
 
     @property
     def prio(self) -> int:
@@ -180,13 +196,14 @@ def first_prio(seq: Seq) -> int:
 
 
 @dataclass
-class Rule:
+class Rule(DropsCachesOnPickle):
     rule_id: int
     tags: list[str]
     seq: Seq
     rb_file: str = "--"
     rb_line: int = 0
     raw: str = ""
+    _CACHES = ("_flat_cache", "_lit_prefix_cache")  # walker.flat_items, walker._lit_prefix
 
 
 @dataclass

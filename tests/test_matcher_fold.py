@@ -210,3 +210,32 @@ def test_cohort_patterns_are_the_only_compiled_regexes():
     cohort_patterns = [c.pattern for c in crb.cohorts if isinstance(c, MatchCohort)]
     assert len(cohort_patterns) == 4  # 256 regexable rules, 64 per cohort
     assert sorted(map(id, _reachable_patterns(crb))) == sorted(map(id, cohort_patterns))
+
+
+def test_pickled_rulebase_leaves_worker_caches_behind():
+    """A rulebase the driver has matched with pickles, plainly and with
+    cloudpickle, to the size of a freshly compiled one: the matcher's and
+    walker's lazily built caches (the dispatch trie's closures, the memos)
+    are not shipped, and the unpickled copy matches the same rows
+    identically."""
+    import pickle
+    import random
+
+    from pyspark import cloudpickle
+
+    from perfbench.workloads import nearmiss_rows, nearmiss_rulebase
+
+    rng = random.Random(1)
+    rb_text = nearmiss_rulebase(256, rng)
+    texts = pd.Series([r[3] for r in nearmiss_rows(2000, 256, rng)[0]], dtype=object)
+
+    def compiled():
+        return compile_rulebase(Rulebase.from_string(rb_text, opts=frozenset({"addExecPath"})))
+
+    crb = compiled()
+    out = M.match_batch(crb, texts)
+    assert all(hasattr(crb, name) for name in ("_trie", "_dispatch_memo_cache", "_exec_paths", "_fb_memo"))
+    for dumps, loads in ((pickle.dumps, pickle.loads), (cloudpickle.dumps, cloudpickle.loads)):
+        blob = dumps(crb)
+        assert len(blob) == len(dumps(compiled()))
+        assert M.match_batch(loads(blob), texts).equals(out)

@@ -27,6 +27,34 @@ def test_enrich_uses_broadcast_joins(spark):
     assert "SortMergeJoin" not in plan
 
 
+def test_enrich_lookup_tables_are_local(spark):
+    """The lookup tables are JVM local relations: they plan as a
+    LocalTableScan, not a Python RDD scan, so broadcasting them runs no
+    Python worker; their rows and enrich_stage's output schema are those
+    of the LANG_MAP/TLD_MAP tables."""
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from liblognorm_spark.pipeline.pages import pages_df
+    from liblognorm_spark.pipeline import pipeline as PL
+
+    lang, tld = PL.lookup_tables(spark)
+    for df in (lang, tld):
+        plan = plan_of(df)
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    assert [tuple(r) for r in lang.collect()] == PL.LANG_MAP
+    assert [tuple(r) for r in tld.collect()] == PL.TLD_MAP
+    assert lang.columns == ["lang", "lang_name", "lang_family"]
+    assert tld.columns == ["tld", "tld_region"]
+
+    parsed = PL.parse_stage(spark, pages_df(spark, SF))
+    enriched = PL.enrich_stage(spark, parsed)
+    text = [StructField(name, StringType(), True)
+            for name in ("tld", "lang_name", "lang_family", "tld_region")]
+    assert enriched.schema == StructType(
+        [text[0], parsed.schema["lang"]]
+        + [f for f in parsed.schema if f.name != "lang"] + text[1:])
+
+
 def test_column_pruning_reaches_scan(spark):
     # a 2-column projection must not read all document columns
     docs = spark.read.parquet(f"{SF}/documents.parquet")

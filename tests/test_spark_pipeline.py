@@ -28,6 +28,19 @@ def test_pipeline_counts(spark, pages):
     assert set(rows) == {"ssh", "ftp", "ident", "fw", "kv", "json", "net", "fallback"}
 
 
+def test_local_relation_keeps_awkward_values(spark):
+    """Lookup values reach the JVM through SQL ``VALUES`` text: quotes,
+    backslashes, control chars, ``${...}`` and non-ASCII come back
+    unchanged."""
+    from liblognorm_spark.pipeline.pipeline import local_relation
+    from tests.test_normalize_df import AWKWARD
+
+    rows = [(str(i), v) for i, v in enumerate(AWKWARD)] + [("it's", "C:\\tmp\\é")]
+    df = local_relation(spark, rows, "k, v")
+    assert df.columns == ["k", "v"]
+    assert [tuple(r) for r in df.collect()] == rows
+
+
 def test_metrics_and_lineage(spark, pages):
     from liblognorm_spark.pipeline.metrics import observe_run, partition_lineage, rule_stats, summary_line
     from liblognorm_spark.pipeline.pipeline import parse_stage
@@ -227,7 +240,7 @@ def test_every_sink_write_goes_through_write_sinks(spark, pages, tmp_path, monke
 
 
 @pytest.mark.parametrize("flag", [["-T"], ["-L"], ["-U"], ["-H"], ["-s"],
-                                  ["-S", "stats.tsv"], ["-x", "stats.dot"]],
+                                  ["-S", "stats.tsv"], ["-x", "stats.dot"], ["-v"]],
                          ids=lambda flag: flag[0])
 def test_cli_spark_refuses_ignored_flags(flag, monkeypatch, capsys):
     """--spark has no counterpart for these in-process outputs: it exits 1
