@@ -16,6 +16,8 @@ from __future__ import annotations
 
 import json as _json
 
+from liblognorm_spark.runtime.matcher import _dumps
+
 
 def _syslog_escape(v: str) -> str:
     out = []
@@ -149,7 +151,9 @@ def encode_csv(event: dict, fields: list[str]) -> str:
 
 
 def encode_json(event: dict) -> str:
-    return _json.dumps(event, ensure_ascii=False, separators=(", ", ": "))
+    """The matcher's own serializer: the in-process CLI prints the text
+    ``encode_df``'s json passthrough of ``fields_json`` prints."""
+    return _dumps(event)
 
 
 ENCODERS = {

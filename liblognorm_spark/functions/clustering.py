@@ -41,6 +41,11 @@ Spark-first shape, designed for 100 TB:
   per-task work, where the "task" here is the driver).  The SQL parses
   to the exact same fold (zip_with + aggregate, left fold from 0.0), so
   every value is unchanged.
+- One assignment projection, :func:`_with_cluster` (row norm -> k
+  cosines -> argmax), serves the Lloyd step, :func:`kmeans_assign` /
+  :func:`cluster_sizes` and :func:`semdedup`.  Every cosine quotient, the
+  per-centroid ones and semdedup's per-pair one, comes from
+  ``similarity._cos_quot_sql``, the same builder as ``cos_pair_sql``.
 
 Every value that leaves these operators is integral (ids, cluster ids,
 counts, micro-scaled cosines), so the DuckDB oracles compare exactly.
@@ -53,9 +58,11 @@ import math
 from pyspark.sql import functions as F
 
 from liblognorm_spark.functions.similarity import (
+    _cos_quot_sql,
     _dot_fold_sql,
     _dot_pair_sql,
     _norm_const_sql,
+    _qcol,
     _sql_f,
 )
 
@@ -70,15 +77,13 @@ CENTROID_SCALE = 1 << 24
 DEFAULT_MAX_CLUSTER = 32768
 
 
-def _cos_arr_sql(vec_sql: str, centroids, norm_sql: str | None = None) -> str:
+def _cos_arr_sql(vec_sql: str, centroids, norm_sql: str) -> str:
     """array(cos(vec, c0), ..., cos(vec, ck-1)) as ONE SQL string, each
     centroid's norm folded in as a driver-computed constant (Python's
     sum() folds left from 0 like the SQL aggregate, math.sqrt is IEEE, so
-    the values match an in-SQL norm exactly).  ``norm_sql`` names an
-    already-computed per-row norm column so the row norm is evaluated
+    the values match an in-SQL norm exactly).  ``norm_sql`` names the
+    already-computed per-row norm column, so the row norm is evaluated
     once instead of once per centroid."""
-    dim = len(centroids[0])
-    nv = norm_sql if norm_sql is not None else _norm_const_sql(vec_sql, dim)
     # centroid dots keep the FOLD form: the centroid literals change
     # every Lloyd iteration, so an unrolled k x dim tree is re-analyzed/
     # re-compiled on every plan — measured +3.5 s per semdedup call at
@@ -87,40 +92,32 @@ def _cos_arr_sql(vec_sql: str, centroids, norm_sql: str | None = None) -> str:
     # codegen win is kept where the generated source is STABLE (the
     # literal-free pair dots below and the per-element sums), which is
     # also where the per-row volume lives at corpus scale.
-    dot = _dot_fold_sql
     parts = []
     for cent in centroids:
         cn = math.sqrt(sum(float(v) * float(v) for v in cent))
         if cn == 0.0:
             parts.append("cast(0.0 as double)")
             continue
-        parts.append(
-            f"(CASE WHEN {nv} = cast(0.0 as double) THEN cast(0.0 as double) "
-            f"ELSE {dot(vec_sql, cent)} / ({nv} * {_sql_f(cn)}) END)"
-        )
+        parts.append(_cos_quot_sql(_dot_fold_sql(vec_sql, cent), norm_sql,
+                                   _sql_f(cn), guard_b=False))
     return "array(" + ", ".join(parts) + ")"
 
 
-_ASSIGN_FROM_COS = "cast(array_position({c}, array_max({c})) - 1 as int)"
-
-
-def _q(col: str) -> str:
-    return f"`{col}`"
-
-
-def _with_cluster(df, vec_col: str, centroids, out=None):
-    """df + ``cluster`` column via the SQL-string assignment.  Staged
-    projections: the row norm is a column (computed once, read by all k
-    cosines), then the cosine array is a column (read twice by
-    array_position/array_max) — the single-expression form re-evaluated
-    both."""
-    keep = df.columns if out is None else out
-    dim = len(centroids[0])
-    cos = _cos_arr_sql(_q(vec_col), centroids, norm_sql="_lls_nrm")
+def _with_cluster(df, vec_col: str, centroids, *keep: str):
+    """``keep`` columns of ``df`` plus ``cluster``: the one assignment
+    projection (Lloyd step, final assignment, semdedup).  Staged
+    projections: the row norm is the column ``_lls_nrm`` (computed once,
+    read by all k cosines, and keepable), then the cosine array is a
+    column (read twice by array_position/array_max) — the
+    single-expression form re-evaluated both."""
+    v = _qcol(vec_col)
+    cos = _cos_arr_sql(v, centroids, norm_sql="_lls_nrm")
     return (
-        df.withColumn("_lls_nrm", F.expr(_norm_const_sql(_q(vec_col), dim)))
+        df.withColumn("_lls_nrm", F.expr(_norm_const_sql(v, len(centroids[0]))))
         .withColumn("_lls_cos", F.expr(cos))
-        .select(*keep, F.expr(_ASSIGN_FROM_COS.format(c="_lls_cos")).alias("cluster"))
+        .select(*keep, F.expr(
+            "cast(array_position(_lls_cos, array_max(_lls_cos)) - 1 as int)"
+        ).alias("cluster"))
     )
 
 
@@ -145,24 +142,11 @@ def kmeans_fit(emb_df, k: int = 8, iters: int = 2,
     # cast(floor(cast(v[d] as double) * 2^24 + 0.5) as long), summed.
     scale = f"{float(CENTROID_SCALE)!r}D"
     sums_sql = "array(" + ", ".join(
-        f"sum(cast(floor(cast({_q(vec_col)}[{d}] as double) * {scale} + 0.5D) "
+        f"sum(cast(floor(cast({_qcol(vec_col)}[{d}] as double) * {scale} + 0.5D) "
         "as long))" for d in range(dim)) + ")"
 
     for _ in range(iters):
-        # norm as a real column first: the k cosines then READ it (k=8
-        # inlines 16 norm copies per row; larger k would explode the
-        # generated code quadratically)
-        scaled = (
-            df.select(F.col(vec_col),
-                      F.expr(_norm_const_sql(_q(vec_col), dim)).alias("_nrm"))
-            .withColumn("_lls_cos", F.expr(_cos_arr_sql(_q(vec_col), cents,
-                                                        norm_sql="_nrm")))
-            .select(
-                F.expr(_ASSIGN_FROM_COS.format(c="_lls_cos")).alias("cluster"),
-                F.col(vec_col),
-            )
-        )
-        sums = scaled.groupBy("cluster").agg(
+        sums = _with_cluster(df, vec_col, cents, vec_col).groupBy("cluster").agg(
             F.count("*").alias("cnt"), F.expr(sums_sql).alias("s")
         ).collect()
         nxt = [list(c) for c in cents]  # empty cluster -> previous centroid
@@ -185,10 +169,8 @@ def kmeans_assign(emb_df, k: int = 8, iters: int = 2,
     fit).  Pure projection over the scan: no join, no shuffle."""
     if centroids is None:
         centroids = kmeans_fit(emb_df, k, iters, vec_col, id_col)
-    return _with_cluster(
-        emb_df.where(F.col(vec_col).isNotNull()), vec_col, centroids,
-        out=[id_col],
-    )
+    return _with_cluster(emb_df.where(F.col(vec_col).isNotNull()), vec_col,
+                         centroids, id_col)
 
 
 def cluster_sizes(emb_df, k: int = 8, iters: int = 2,
@@ -236,17 +218,9 @@ def semdedup(emb_df, k: int = 8, iters: int = 2, threshold: float = 0.9,
         centroids = kmeans_fit(emb_df, k, iters, vec_col, id_col)
     dim = len(centroids[0])
     base = _spread(emb_df.where(F.col(vec_col).isNotNull()))
-    # norm column first, then cosines READ it (one norm fold per row,
-    # not one per centroid per row), then the assignment reads the
-    # cosine array column
-    assigned = (
-        base.select(F.col(id_col), F.col(vec_col),
-                    F.expr(_norm_const_sql(_q(vec_col), dim)).alias("_nrm"))
-        .withColumn("_lls_cos", F.expr(_cos_arr_sql(_q(vec_col), centroids,
-                                                    norm_sql="_nrm")))
-        .select(id_col, vec_col, "_nrm",
-                F.expr(_ASSIGN_FROM_COS.format(c="_lls_cos")).alias("cluster"))
-    )
+    # the assignment keeps its row norm, so each pair reads two norms
+    # instead of re-folding them
+    assigned = _with_cluster(base, vec_col, centroids, id_col, vec_col, "_lls_nrm")
     # persist BEFORE the cap so the cap's hot-cluster aggregate and both
     # join sides read the cached assignment instead of re-evaluating the
     # k x dim cosine folds (the minhash path had exactly this
@@ -258,27 +232,23 @@ def semdedup(emb_df, k: int = 8, iters: int = 2, threshold: float = 0.9,
         F.col("cluster"),
         F.col(id_col).alias("id_a"),
         F.col(vec_col).alias("va"),
-        F.col("_nrm").alias("na"),
+        F.col("_lls_nrm").alias("na"),
     )
     b = assigned.select(
         F.col("cluster"),
         F.col(id_col).alias("id_b"),
         F.col(vec_col).alias("vb"),
-        F.col("_nrm").alias("nb"),
+        F.col("_lls_nrm").alias("nb"),
     )
     # same value as similarity.cos_pair_sql(va, vb): the norms are the identical
     # IEEE folds, computed once per row instead of once per pair, and
     # the per-pair dot is the unrolled codegen chain (the interpreted
     # zip_with fold dominated the within-cluster join at scale)
-    cos = F.when(
-        (F.col("na") == 0) | (F.col("nb") == 0), F.lit(0.0)
-    ).otherwise(
-        F.expr(_dot_pair_sql("`va`", "`vb`", dim)) / (F.col("na") * F.col("nb"))
-    )
+    cos = _cos_quot_sql(_dot_pair_sql("`va`", "`vb`", dim), "`na`", "`nb`")
     pairs = (
         a.join(b, "cluster")
         .where(F.col("id_a") < F.col("id_b"))
-        .where(cos >= F.lit(float(threshold)))
+        .where(F.expr(cos) >= F.lit(float(threshold)))
     )
     return (
         pairs.groupBy("id_b", "cluster")

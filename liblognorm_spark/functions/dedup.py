@@ -8,6 +8,18 @@ cross join.  Hot buckets (boilerplate-heavy web text collapses many docs
 into one band) are capped by an explicit ``max_bucket_size`` so one bad key
 cannot produce a quadratic pair blowup.
 
+Each step is defined once here and shared by every operator that takes it
+(the text, search and clustering modules import them too):
+
+* ``_words`` / ``WS_RUN`` — the one whitespace tokenizer;
+  ``_word_shingles`` builds the k-word shingles on top of it;
+* ``_cap_buckets`` — the hot-bucket cap (aggregate + anti-join);
+* ``_bucket_pairs`` — the capped, persisted ``a.id < b.id`` bucket
+  self-join with its per-pair dedup, used by ``minhash_lsh_pairs``,
+  ``simhash_near_dups`` and ``embedding_near_dups``;
+* ``_persist`` / ``unpersist_dedup_caches`` — the one registry of
+  persisted intermediates; ``_spread`` — the small-input repartition.
+
 All hash functions are md5-derived so every operator here has an exact
 DuckDB-SQL twin (see ``__spark_entry__.oracle_sql``): the oracle runs the
 same algorithm — same shingles, same hashes, same bands — and must produce
@@ -58,11 +70,6 @@ def exact_dedup(df, text_col: str = "text", id_col: str = "doc_id"):
     )
 
 
-def exact_dup_groups(df, text_col: str = "text", id_col: str = "doc_id"):
-    """Groups with >1 member: (keep_id, n_dupes)."""
-    return exact_dedup(df, text_col, id_col).filter(F.col("n_dupes") > 1)
-
-
 # ------------------------------------------------------------ shingles & minhash
 
 N_MINHASH = 16
@@ -90,6 +97,32 @@ def _cap_buckets(df, keys: list, max_bucket_size: int):
     return df.join(hot, keys, "left_anti")
 
 
+def _bucket_pairs(keyed, keys: list, id_col: str, max_bucket_size, *pair_cols):
+    """The one candidate-pair join of the near-dup operators (minhash,
+    simhash, embedding): ``keyed`` rows sharing ``keys`` are candidates.
+
+    Hot buckets are capped first (``_cap_buckets``; None disables it),
+    the capped frame is persisted so both sides of the ``a.id < b.id``
+    self-join read one materialization, and a pair colliding in several
+    buckets is kept once.  Returns (id_a, id_b, *pair_cols); ``pair_cols``
+    are columns over the ``a``/``b`` aliases, evaluated before the dedup,
+    so they must be equal in every bucket a pair shares."""
+    if max_bucket_size is not None:
+        keyed = _cap_buckets(keyed, keys, max_bucket_size)
+    keyed = _persist(keyed)
+    a, b = keyed.alias("a"), keyed.alias("b")
+    return (
+        a.join(b, keys)
+        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+        .select(
+            F.col(f"a.{id_col}").alias("id_a"),
+            F.col(f"b.{id_col}").alias("id_b"),
+            *pair_cols,
+        )
+        .dropDuplicates(["id_a", "id_b"])
+    )
+
+
 def _spread(df):
     """Repartition up to the session's default parallelism when the input
     arrives in fewer partitions (a small parquet file = one split = one
@@ -111,10 +144,23 @@ def _spread(df):
     return df
 
 
+#: one run of whitespace, spelled out: Java's \s includes \x0B where
+#: DuckDB's RE2 does not, so \s itself is not dialect-portable
+WS_RUN = r"[ \t\n\x0B\f\r]+"
+
+
+def _words(col):
+    """The one whitespace tokenizer: ``col`` trimmed and split on runs of
+    WS_RUN.  Every word-level operator (shingles, simhash, spans,
+    boilerplate segments, unigram NLL, BM25) tokenizes through it, so
+    their DuckDB twins all mirror one ``string_split_regex``."""
+    return F.split(F.trim(col), WS_RUN)
+
+
 def _word_shingles(col, k: int = SHINGLE_K):
     """k-word shingles as an array column, built with JVM-side higher-order
     functions (no Python)."""
-    words = F.split(F.trim(col), r"[ \t\n\x0B\f\r]+")
+    words = _words(col)
     n = F.size(words)
     idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
     return F.when(n < k, F.array(F.array_join(words, " "))).otherwise(
@@ -217,16 +263,11 @@ def minhash_lsh_pairs(df, text_col: str = "text", id_col: str = "doc_id",
     # aggregate, its anti-join, both self-join sides) — before round 6
     # the fold ran twice because the persist sat below the cap
     exploded = _banded(df, text_col, id_col, n, bands, persist_sigs=True)
-    if max_bucket_size is not None:
-        exploded = _cap_buckets(exploded, ["band", "band_key"], max_bucket_size)
-    # the capped frame is ALSO persisted (same layout the pre-round-6 code
-    # cached): the self-join's two sides then read one materialization
-    # instead of re-deriving band keys + anti-join twice from the sig
-    # cache, and repeated consumers (connected-components rounds, repeat
-    # invocations in a warm session) skip the banding entirely
-    exploded = _persist(exploded)
-    a = exploded.alias("a")
-    b = exploded.alias("b")
+    # _bucket_pairs ALSO persists the capped frame: the self-join's two
+    # sides then read one materialization instead of re-deriving band keys
+    # + anti-join twice from the sig cache, and repeated consumers
+    # (connected-components rounds, repeat invocations in a warm session)
+    # skip the banding entirely.
     # est_jaccard is computed BEFORE the per-pair dedup so dropDuplicates
     # groups only scalar longs: with the minhash arrays carried through,
     # the First(array) aggregation buffer is not hash-aggregatable and
@@ -244,16 +285,8 @@ def minhash_lsh_pairs(df, text_col: str = "text", id_col: str = "doc_id",
         * 1000
         / F.lit(n)
     ).cast("long")
-    return (
-        a.join(b, ["band", "band_key"])
-        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            match_frac.alias("est_jaccard_millis"),
-        )
-        .dropDuplicates(["id_a", "id_b"])  # pair may collide in >1 band
-    )
+    return _bucket_pairs(exploded, ["band", "band_key"], id_col, max_bucket_size,
+                         match_frac.alias("est_jaccard_millis"))
 
 
 def lsh_bucket_stats(df, text_col: str = "text", id_col: str = "doc_id",
@@ -281,7 +314,7 @@ def simhash(df, text_col: str = "text", id_col: str = "doc_id", bits: int = SIMH
     shiftright/bitwise-and -> groupBy doc -> sign aggregation.  The word
     hash is md5-derived (see _hmd5_long) so the whole operator has an exact
     DuckDB oracle."""
-    words = F.explode(F.split(F.trim(F.col(text_col)), r"[ \t\n\x0B\f\r]+")).alias("w")
+    words = F.explode(_words(F.col(text_col))).alias("w")
     base = _spread(df).select(F.col(id_col), words)
     wh = base.withColumn("wh", _hmd5_long(F.col("w"), SIMHASH_SEED))
     agg_exprs = [
@@ -325,21 +358,9 @@ def simhash_near_dups(df, text_col: str = "text", id_col: str = "doc_id",
     keyed = s.select(
         id_col, "simhash", F.explode(F.array(*block_structs)).alias("b")
     ).select(id_col, "simhash", "b.blk", "b.blk_val")
-    if max_bucket_size is not None:
-        keyed = _cap_buckets(keyed, ["blk", "blk_val"], max_bucket_size)
-    keyed = _persist(keyed)
-    a, b = keyed.alias("a"), keyed.alias("b")
-    cands = (
-        a.join(b, ["blk", "blk_val"])
-        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a.simhash").alias("sa"),
-            F.col("b.simhash").alias("sb"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    cands = _bucket_pairs(keyed, ["blk", "blk_val"], id_col, max_bucket_size,
+                          F.col("a.simhash").alias("sa"),
+                          F.col("b.simhash").alias("sb"))
     hamming = F.bit_count(F.col("sa").bitwiseXOR(F.col("sb")))
     return cands.select("id_a", "id_b", hamming.alias("hamming")).where(
         F.col("hamming") <= max_hamming
@@ -407,21 +428,14 @@ def embedding_near_dups(emb_df, vec_col: str = "embedding", id_col: str = "vec_i
 
     tables = _table_planes(dim, nplanes, ntables)
     keyed = _bucketed(emb_df, vec_col, tables, id_col, vec_col)
-    if max_bucket_size is not None:
-        keyed = _cap_buckets(keyed, ["tbl", "bkt"], max_bucket_size)
-    keyed = _persist(keyed)  # self-join reuses the bucketing
-    a, b = keyed.alias("a"), keyed.alias("b")
-    pairs = (
-        a.join(b, ["tbl", "bkt"])
-        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col(f"a.{vec_col}").alias("_va"),
-            F.col(f"b.{vec_col}").alias("_vb"),
-        )
-        .dropDuplicates(["id_a", "id_b"])  # dedup across tables BEFORE the cosine
-    )
+    # both vectors ride through the dedup and the cosine runs after it.
+    # Scoring before the dedup (the minhash shape: scalar pair columns, no
+    # SortAggregate) took 19.7-25.0 s against 9.5-13.1 s on sf0.1
+    # (local[2], 4 alternating pairs), and its stage hit the "Code grows
+    # beyond 64 KB" whole-stage codegen fallback
+    pairs = _bucket_pairs(keyed, ["tbl", "bkt"], id_col, max_bucket_size,
+                          F.col(f"a.{vec_col}").alias("_va"),
+                          F.col(f"b.{vec_col}").alias("_vb"))
     cos = F.expr(f"cast({cos_pair_sql('`_va`', '`_vb`', dim)} * 1000 as long)")
     return pairs.select(
         "id_a", "id_b", cos.alias("cos_millis")
@@ -599,7 +613,7 @@ def _span_occurrences(df, text_col: str, id_col: str, k: int):
     HashAggregate — the string okey forced Sort + SortAggregate over
     every shingle occurrence (guide §2.4: an Exchange-adjacent Sort the
     operator does not need)."""
-    words = F.split(F.trim(F.col(text_col)), r"[ \t\n\x0B\f\r]+")
+    words = _words(F.col(text_col))
     n = F.size(words)
     idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
     occs = F.when(n < k, F.array(F.struct(
@@ -717,7 +731,7 @@ def excise_duplicate_spans(df, text_col: str = "text", id_col: str = "doc_id",
         F.explode(F.sequence(F.col("start"), F.col("start") + F.col("olen") - 1)).alias("pos"),
     ).distinct()
 
-    words = F.split(F.trim(F.col(text_col)), r"[ \t\n\x0B\f\r]+")
+    words = _words(F.col(text_col))
     toks = (
         df.where(F.col(text_col).isNotNull())
         .select(F.col(id_col), F.posexplode(words).alias("pos", "word"))

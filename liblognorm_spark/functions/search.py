@@ -30,12 +30,10 @@ import math
 
 from pyspark.sql import functions as F
 
+from liblognorm_spark.functions.dedup import _words
+
 BM25_K1 = 1.2
 BM25_B = 0.75
-
-
-def _words(text_col):
-    return F.split(F.trim(F.lower(F.col(text_col))), r"[ \t\n\x0B\f\r]+")
 
 
 def _tf(words, term: str):
@@ -51,7 +49,7 @@ def corpus_stats(df, query_terms: list[str], text_col: str = "text"):
     lower()-ed token stream (a verbatim 'Customer' would otherwise
     silently match nothing); returned df keys are the lowered forms."""
     query_terms = [t.lower() for t in query_terms]
-    words = _words(text_col)
+    words = _words(F.lower(F.col(text_col)))
     row = (
         df.where(F.col(text_col).isNotNull())
         .select(
@@ -91,7 +89,7 @@ def bm25_topk(df, query_terms: list[str], k: int = 10,
     literals."""
     query_terms = [t.lower() for t in query_terms]
     n, avgdl, dfs = corpus_stats(df, query_terms, text_col)
-    words = _words(text_col)
+    words = _words(F.lower(F.col(text_col)))
     dl = F.size(words).cast("double")
     score = F.lit(0.0)
     for t in query_terms:

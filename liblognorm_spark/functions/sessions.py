@@ -1,9 +1,9 @@
 """Sessionization: gap-based sessions over an event stream.
 
-Batch: the classic lag+cumsum window composition (pure JVM, two window
-passes over one shuffle by user).  Streaming: session_window for native
-state management.  The reference has no session semantics — this is part
-of the large-scale pipeline operator set layered on top (SURVEY.md §2.5).
+The classic lag+cumsum window composition (pure JVM, two window passes
+over one shuffle by user).  The reference has no session semantics — this
+is part of the large-scale pipeline operator set layered on top
+(SURVEY.md §2.5).
 """
 
 from __future__ import annotations
@@ -34,21 +34,5 @@ def session_stats(events, user_col: str = "user_id", ts_col: str = "ts",
         .agg(
             F.count("*").alias("n_events"),
             (F.unix_timestamp(F.max(ts_col)) - F.unix_timestamp(F.min(ts_col))).alias("span_sec"),
-        )
-    )
-
-
-def streaming_session_counts(stream, user_col: str = "user_id", ts_col: str = "ts",
-                             gap: str = "30 minutes", watermark: str = "1 hour"):
-    """Streaming-native variant: session_window keeps per-key state with
-    watermark-driven eviction (the applyInPandasWithState-class stateful
-    operator, expressed with the built-in session window)."""
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(F.col(ts_col), gap).alias("sw"), F.col(user_col))
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            F.col("sw.start").alias("s_start"), F.col("sw.end").alias("s_end"),
-            user_col, "n_events",
         )
     )

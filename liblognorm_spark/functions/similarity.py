@@ -115,16 +115,23 @@ def _dot_pair_sql(a_sql: str, b_sql: str, dim: int) -> str:
     ) + ")"
 
 
+def _cos_quot_sql(dot_sql: str, na_sql: str, nb_sql: str,
+                  guard_b: bool = True) -> str:
+    """The one cosine quotient, ``dot / (na * nb)``, guarded to 0.0 when a
+    norm is zero.  ``guard_b=False`` leaves ``nb`` unguarded: the caller
+    passes a driver-side norm literal it has already checked."""
+    zero = "cast(0.0 as double)"
+    guard = f"{na_sql} = {zero}"
+    if guard_b:
+        guard = f"({guard}) OR ({nb_sql} = {zero})"
+    return f"(CASE WHEN {guard} THEN {zero} ELSE {dot_sql} / ({na_sql} * {nb_sql}) END)"
+
+
 def cos_pair_sql(a_sql: str, b_sql: str, dim: int) -> str:
     """Cosine of two dim-length vector columns, 0.0 when either norm is
     zero."""
-    na = _norm_const_sql(a_sql, dim)
-    nb = _norm_const_sql(b_sql, dim)
-    return (
-        f"(CASE WHEN ({na} = cast(0.0 as double)) OR ({nb} = cast(0.0 as double)) "
-        f"THEN cast(0.0 as double) "
-        f"ELSE {_dot_pair_sql(a_sql, b_sql, dim)} / ({na} * {nb}) END)"
-    )
+    return _cos_quot_sql(_dot_pair_sql(a_sql, b_sql, dim),
+                         _norm_const_sql(a_sql, dim), _norm_const_sql(b_sql, dim))
 
 
 def cos_const_sql(vec_sql: str, query_vec) -> str:
@@ -135,11 +142,9 @@ def cos_const_sql(vec_sql: str, query_vec) -> str:
     qn = math.sqrt(sum(float(v) * float(v) for v in query_vec))
     if qn == 0.0:
         return "cast(0.0 as double)"
-    nv = _norm_const_sql(vec_sql, len(query_vec))
-    return (
-        f"(CASE WHEN {nv} = cast(0.0 as double) THEN cast(0.0 as double) "
-        f"ELSE {_dot_const_sql(vec_sql, query_vec)} / ({nv} * {_sql_f(qn)}) END)"
-    )
+    return _cos_quot_sql(_dot_const_sql(vec_sql, query_vec),
+                         _norm_const_sql(vec_sql, len(query_vec)), _sql_f(qn),
+                         guard_b=False)
 
 
 def _hyperplanes(dim: int, nplanes: int, seed: str = "lls-hp"):

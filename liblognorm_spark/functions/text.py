@@ -9,6 +9,14 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from liblognorm_spark.functions.dedup import (
+    WS_RUN,
+    _persist,
+    _spread,
+    _word_shingles,
+    _words,
+)
+
 # language marker words for the n-gram/stopword language-ID heuristic;
 # deliberately tiny + deterministic so the SQL oracle can mirror it
 LANG_MARKERS = {
@@ -93,18 +101,7 @@ def fingerprint(col):
     """Document fingerprint: md5 over whitespace-normalized lowercase text
     (content-defined identity for exact/near dedup bucketing)."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.md5(F.lower(F.regexp_replace(c, r"[ \t\n\x0B\f\r]+", " ")))
-
-
-def with_text_stats(df, col: str = "text"):
-    return (
-        df.withColumn("n_tokens", token_count(col))
-        .withColumn("n_chars_calc", char_count(col))
-        .withColumn("punct_millis", punct_ratio_millis(col))
-        .withColumn("quality_millis", quality_score_millis(col))
-        .withColumn("lang_pred", lang_id(col))
-        .withColumn("fp", fingerprint(col))
-    )
+    return F.md5(F.lower(F.regexp_replace(c, WS_RUN, " ")))
 
 
 # ---------------------------------------------------------------- filtering
@@ -222,8 +219,6 @@ def boilerplate_ngrams(df, text_col: str = "text", id_col: str = "doc_id",
     Scale shape: per-doc ``array_distinct`` BEFORE the explode turns the
     distinct-(doc, ngram) step into a per-row projection — the only
     shuffle is the final count per ngram (map-side partial agg)."""
-    from liblognorm_spark.functions.dedup import _spread, _word_shingles
-
     sh = _spread(df.where(F.col(text_col).isNotNull())).select(
         F.col(id_col),
         F.explode(F.array_distinct(_word_shingles(F.col(text_col)))).alias("ngram"),
@@ -254,13 +249,11 @@ def strip_boilerplate(df, text_col: str = "text", id_col: str = "doc_id",
     structs), never a global sort.
 
     The persisted segment frame registers in the package-wide cache
-    registry — call :func:`unpersist_caches` (exported from this module)
-    after consuming the result in long-running jobs."""
+    registry — call ``dedup.unpersist_dedup_caches()`` after consuming the
+    result in long-running jobs."""
     from pyspark.sql.functions import broadcast
 
-    from liblognorm_spark.functions.dedup import _persist, _spread
-
-    words = F.split(F.trim(F.col(text_col)), r"[ \t\n\x0B\f\r]+")
+    words = _words(F.col(text_col))
     nseg = F.ceil(F.size(words) / F.lit(k)).cast("int")
     segs = F.transform(
         F.sequence(F.lit(0), nseg - 1),
@@ -308,8 +301,6 @@ def doc_repetition(df, text_col: str = "text", id_col: str = "doc_id"):
     filter's raw signal): total vs distinct word n-grams per doc and the
     duplicate fraction in millis.  Pure per-row projection — no shuffle,
     whole plan stays in one codegen stage over the scan."""
-    from liblognorm_spark.functions.dedup import _word_shingles
-
     sl = _word_shingles(F.col(text_col))
     total = F.size(sl)
     dist = F.size(F.array_distinct(sl))
@@ -372,16 +363,10 @@ def unigram_nll(df, text_col: str = "text", id_col: str = "doc_id"):
 
     from pyspark.sql.functions import broadcast
 
-    from liblognorm_spark.functions.dedup import _spread
-
-    words = F.split(F.trim(F.col(text_col)), r"[ \t\n\x0B\f\r]+")
-    toks = (
+    toks = _persist(
         _spread(df.where(F.col(text_col).isNotNull()))
-        .select(F.col(id_col), F.explode(words).alias("word"))
+        .select(F.col(id_col), F.explode(_words(F.col(text_col))).alias("word"))
     )
-    from liblognorm_spark.functions.dedup import _persist
-
-    toks = _persist(toks)
     vocab = toks.groupBy("word").agg(F.count("*").alias("cnt"))
     vocab = _persist(vocab)
 
@@ -415,13 +400,3 @@ def unigram_nll(df, text_col: str = "text", id_col: str = "doc_id"):
             F.expr("(sum_nll * 15625) DIV (n_tokens * 16384)").alias("mean_nll_micros"),
         )
     )
-
-
-def unpersist_caches():
-    """Release every persisted intermediate registered by this package's
-    operators (strip_boilerplate's exploded segment frame lives in the
-    same registry the dedup module uses).  Call after consuming results
-    in long-running jobs."""
-    from liblognorm_spark.functions.dedup import unpersist_dedup_caches
-
-    unpersist_dedup_caches()

@@ -1,15 +1,15 @@
 """Manifest-based checkpoint/resume for the batch pipeline.
 
 The input is split into chunks (hash of url modulo n_chunks — stable under
-re-runs and independent of physical file layout).  Chunks are processed in
-WAVES: one wave = ONE Spark job that scans the input once, computes every
-chunk in the wave, and writes them all with one
+re-runs and independent of physical file layout).  A run processes the
+chunks the manifest lacks as ONE wave: one Spark job that scans the input
+once, computes every chunk in the wave, and writes them all with one
 ``pipeline.write_sinks(by=("chunk",))`` dynamic-overwrite write.  After the
 wave's files are durably committed, each chunk id is appended to a JSON
 manifest; a restarted job skips completed chunks, and a crash mid-wave is
 safe because the retry overwrites exactly the wave's partition directories.
-All remaining chunks run in one wave, so total reads are O(input), not
-O(n_chunks * input) like a per-chunk filter loop.
+Total reads are O(input), not O(n_chunks * input) like a per-chunk filter
+loop.
 
 This is the batch analogue of Structured Streaming's checkpointLocation
 (which streaming/stream.py uses directly) and satisfies the north rule's
@@ -48,11 +48,12 @@ def run_resumable(spark, pages, out_dir: str, n_chunks: int = 8,
                   rulebase_text: str | None = None, fail_after: int | None = None):
     """Run the pipeline chunked with manifest resume (see module docstring).
 
-    `fail_after` (testing): raise after N chunks have committed, simulating
-    a crash; waves are sized to that boundary so the manifest state is
-    deterministic.  Returns the manifest.  Sinks land under
-    out_dir/chunk=<id>/sink=<sink>/ with per-chunk partition lineage; the
-    manifest's "format" is the sink format actually written."""
+    `fail_after` (testing): the wave is only the first N remaining chunks,
+    and the run raises after committing them if chunks remain, simulating
+    a crash at a deterministic manifest state.  Returns the manifest.
+    Sinks land under out_dir/chunk=<id>/sink=<sink>/ with per-chunk
+    partition lineage; the manifest's "format" is the sink format actually
+    written."""
     from pyspark.sql import functions as F
 
     from liblognorm_spark.pipeline import pipeline as PL
@@ -64,24 +65,11 @@ def run_resumable(spark, pages, out_dir: str, n_chunks: int = 8,
         man.state["started_at"] = time.time()
 
     remaining = [c for c in range(n_chunks) if c not in man.completed]
-    if fail_after == 0 and remaining:
-        # the simulated crash happens before any wave runs; range() would
-        # otherwise reject a 0 step before the guard fires.  On an
-        # already-complete manifest there is no work left to crash in, so
-        # the resume returns cleanly like any other fail_after value.
-        raise RuntimeError("simulated failure after 0 chunks")
-    # fail_after=0 only reaches here with nothing remaining (guard above);
-    # fall through to the no-op loop with a valid step
-    wave_size = fail_after or max(len(remaining), 1)
-    keyed = pages.withColumn("chunk", F.pmod(F.xxhash64("url"), F.lit(n_chunks)).cast("int"))
-
-    done = 0
-    for start in range(0, len(remaining), wave_size):
-        if fail_after is not None and done >= fail_after:
-            raise RuntimeError(f"simulated failure after {done} chunks")
-        wave = remaining[start:start + wave_size]
-        part = keyed.filter(F.col("chunk").isin(wave))
-        parsed = PL.parse_stage(spark, part, rulebase_text)
+    wave = remaining[:fail_after]
+    if wave:
+        keyed = pages.withColumn("chunk", F.pmod(F.xxhash64("url"), F.lit(n_chunks)).cast("int"))
+        parsed = PL.parse_stage(spark, keyed.filter(F.col("chunk").isin(wave)),
+                                rulebase_text)
         # one scan per wave: cache the parsed wave so the sink write and the
         # lineage aggregation share it instead of re-parsing
         parsed = parsed.persist()
@@ -97,5 +85,6 @@ def run_resumable(spark, pages, out_dir: str, n_chunks: int = 8,
             by_chunk[d.pop("chunk")].append(d)
         for c in wave:
             man.mark(c, by_chunk[c])
-            done += 1
+    if len(wave) < len(remaining):
+        raise RuntimeError(f"simulated failure after {len(wave)} chunks")
     return man

@@ -19,7 +19,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from liblognorm_spark.compiler.motifs import NO_VALUE, PARSERS, coerce_value
-from liblognorm_spark.rulebase.loader import Alt, PNode, Rule
+from liblognorm_spark.rulebase.loader import Alt, PNode
 
 
 class WalkState:
@@ -362,19 +362,6 @@ def walk_flat(state: WalkState, items, json_out: dict | None) -> bool:
         for name, value in reversed(pairs):
             attach(json_out, name, value)
     return True
-
-
-def match_rule(rule: Rule, text: str, types: dict, state: WalkState | None = None):
-    """Try one rule against `text`.  Returns fields dict or None.
-
-    `state` carries parsedTo across rules of the same message so the
-    unparsed suffix reflects the global longest parse (src/pdag.c:1299)."""
-    if state is None:
-        state = WalkState(text=text, strlen=len(text), types=types)
-    fields: dict = {}
-    if walk_seq(state, rule.seq, 0, 0, False, fields, None):
-        return fields
-    return None
 
 
 def _lit_prefix(rule) -> str:

@@ -106,26 +106,14 @@ def start_fanout_query(parsed_stream, out_dir: str, checkpoint_dir: str):
 
 
 def dedup_stream(stream_df, key_cols=("url",), ts_col: str = "warc_ts",
-                 watermark: str = "10 minutes", within_watermark: bool = True):
-    """Streaming exact-dedup: drop repeats of the key across micro-batches.
-
-    ``within_watermark=True`` uses dropDuplicatesWithinWatermark (Spark
-    3.5+): state for a key is EVICTED once the watermark passes its event
-    time, so state size is bounded by the churn inside the watermark delay
-    — the only formulation that survives an unbounded stream at web scale.
-    ``False`` falls back to global dropDuplicates (exact forever, state
-    grows without bound — only for bounded backfills)."""
-    wm = stream_df.withWatermark(ts_col, watermark)
-    cols = list(key_cols)
-    # capability probe, not try/except: an AttributeError raised INSIDE
-    # dropDuplicatesWithinWatermark must propagate, not silently flip the
-    # stream to unbounded-state dedup
-    if within_watermark and hasattr(wm, "dropDuplicatesWithinWatermark"):
-        return wm.dropDuplicatesWithinWatermark(cols)
-    # exact-forever global dedup on the KEY alone (state unbounded);
-    # including the event time here would let same-key rows with different
-    # timestamps through, which is not deduplication
-    return wm.dropDuplicates(cols)
+                 watermark: str = "10 minutes"):
+    """Streaming exact-dedup: drop repeats of the key across micro-batches
+    with dropDuplicatesWithinWatermark.  State for a key is EVICTED once
+    the watermark passes its event time, so state size is bounded by the
+    churn inside the watermark delay — the formulation that survives an
+    unbounded stream at web scale."""
+    return (stream_df.withWatermark(ts_col, watermark)
+            .dropDuplicatesWithinWatermark(list(key_cols)))
 
 
 def decontaminate_stream(doc_stream, bench_df, out_dir: str,

@@ -191,6 +191,22 @@ def test_cli_spark_sink_mode(spark, tmp_path):
     assert "unparsed-data" in json.loads(got["unparsed"])
 
 
+def test_cli_json_same_text_in_process_and_spark(spark, tmp_path, capsys):
+    """-e json prints the same text with and without --spark: both paths
+    serialize with the matcher's fields_json serializer."""
+    from liblognorm_spark.cli import main
+
+    rb = "version=2\nrule=ssh:sshd: %w:word%\nrule=kv:%f:name-value-list%\n"
+    inp = tmp_path / "in.log"
+    inp.write_text("sshd: hello\nuser=x\njunk ü\n", encoding="utf-8")
+    printed = []
+    for extra in ([], ["--spark"]):
+        assert main(["-R", rb, *extra, str(inp)]) == 0
+        printed.append(capsys.readouterr().out.splitlines())
+    assert printed[0][0] == '{"w":"hello","event.tags":["ssh"]}'
+    assert printed[0] == printed[1]
+
+
 def test_every_sink_write_goes_through_write_sinks(spark, pages, tmp_path, monkeypatch):
     """pipeline.write_sinks is the one sink writer: a checkpoint wave, a
     stream fan-out epoch and a CLI --out run each reach it exactly once."""
